@@ -1,7 +1,7 @@
 """Deterministic text hashing / shingling column helpers.
 
 Used by the dedup operators. Everything here is chosen to be computable
-IDENTICALLY in Spark (column expressions, JVM-side, codegen'd) and in
+IDENTICALLY in Spark (column expressions, JVM-side) and in
 DuckDB SQL (see plans/sql_text.py), so the MinHash/SimHash pipelines are
 oracle-checkable end to end: h32 = first 8 hex chars of md5 parsed as an
 integer, then salted affine maps modulo a Mersenne prime.
@@ -10,12 +10,22 @@ MLlib's MinHashLSH would be the stock choice but draws random coefficients
 at fit time; fixed salts keep the whole pipeline reproducible across
 engines and runs, which is what a production dedup pipeline wants anyway
 (re-runs must bucket identically).
+
+The array helpers are higher-order functions (``transform``,
+``aggregate``), which Spark does NOT code-generate: ``ArrayTransform``,
+``ZipWith`` and ``ArrayAggregate`` implement ``CodegenFallback`` (checked
+with ``javap`` on ``spark-catalyst_2.13-4.1.2.jar``), so each element is
+evaluated through the interpreted lambda body. Anything fixed per row
+must therefore be bound outside the lambda, never written inside it —
+see ``word_ngrams``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from data_pipeline_agent_spark.functions import bind
 
 # Mersenne prime 2^31-1; affine salt tables (deterministic, engine-agnostic)
 MINHASH_PRIME = 2147483647
@@ -35,16 +45,28 @@ def tokens(c: Column) -> Column:
 
 
 def word_ngrams(toks: Column, n: int = NGRAM_N) -> Column:
-    """Distinct word n-gram shingles; empty array when fewer than n tokens."""
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + off) for off in range(n)]
-        ),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
-    )
+    """Distinct word n-gram shingles; empty array when fewer than n tokens.
+
+    ``toks`` is bound ONCE per row (``bind``), so the gram lambda reads a
+    lambda variable instead of a copy of the caller's expression. Without
+    the binding, a caller passing ``tokens(...)`` inline embeds a copy of
+    the regex split per ``element_at`` inside the gram lambda, which Spark
+    re-runs for every gram (O(tokens^2) per document): lambda bodies are
+    interpreted element by element and subexpression elimination does not
+    reach inside them."""
+
+    def body(t: Column) -> Column:
+        grams = F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(t, i + off) for off in range(n)]
+            ),
+        )
+        return F.array_distinct(
+            F.when(F.size(t) >= n, grams).otherwise(F.array().cast("array<string>"))
+        )
+
+    return bind(toks, body)
 
 
 def h32(c: Column) -> Column:

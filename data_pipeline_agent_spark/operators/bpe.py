@@ -45,7 +45,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from data_pipeline_agent_spark.functions import bind
 from data_pipeline_agent_spark.functions.text_hash import tokens
+from data_pipeline_agent_spark.session import local_frame
 
 # Words entering BPE training: lowercase ASCII alphanumeric only. This is
 # a *scope* choice, not a shortcut: it pins Spark's UTF-16-code-unit
@@ -462,7 +464,7 @@ def bpe_train(
         docs, n_merges, text_col, batch=batch, stats=stats, exact=exact
     )
     vocab.unpersist()
-    return spark.createDataFrame(merges, MERGES_SCHEMA)
+    return local_frame(spark, merges, MERGES_SCHEMA)
 
 
 def bpe_merges_with_approx_contract(
@@ -524,7 +526,7 @@ def bpe_merges_with_approx_contract(
     overlap = (
         len(seq_tokens & apx_tokens) / len(seq_tokens) if seq_tokens else 1.0
     )
-    return spark.createDataFrame(seq_rules, MERGES_SCHEMA).select(
+    return local_frame(spark, seq_rules, MERGES_SCHEMA).select(
         "*",
         F.lit(bool(overlap >= overlap_floor)).alias("vocab_overlap_ok"),
         F.lit(bool(abs(fa - fs) <= fertility_eps)).alias("fertility_delta_ok"),
@@ -563,23 +565,31 @@ def _apply_merge_dyn(syms: F.Column, lhs: F.Column, rhs: F.Column) -> F.Column:
     immediately re-merges: the accumulator's last element becomes
     lhs||rhs, which cannot equal lhs since rhs is non-empty). NULL
     lhs/rhs (no applicable rule) make every match condition NULL, so
-    the fold degrades to identity."""
+    the fold degrades to identity. The rule (lhs, rhs, lhs||rhs) is bound
+    once per call, so the per-symbol step reads it instead of re-running
+    the caller's rule lookup per element."""
 
-    def step(acc: F.Column, s: F.Column) -> F.Column:
-        return F.when(
-            (F.element_at(acc, -1) == lhs) & (s == rhs),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.concat(lhs, rhs)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s)))
+    def fold(rule: F.Column) -> F.Column:
+        def step(acc: F.Column, s: F.Column) -> F.Column:
+            return F.when(
+                (F.element_at(acc, -1) == rule["l"]) & (s == rule["r"]),
+                F.concat(
+                    F.slice(acc, 1, F.size(acc) - 1),
+                    F.array(rule["tok"]),
+                ),
+            ).otherwise(F.concat(acc, F.array(s)))
 
-    return F.when(F.size(syms) < 2, syms).otherwise(
-        F.aggregate(
-            F.slice(syms, 2, F.size(syms) - 1),
-            F.slice(syms, 1, 1),
-            step,
+        return F.when(F.size(syms) < 2, syms).otherwise(
+            F.aggregate(
+                F.slice(syms, 2, F.size(syms) - 1),
+                F.slice(syms, 1, 1),
+                step,
+            )
         )
+
+    return bind(
+        F.struct(lhs.alias("l"), rhs.alias("r"), F.concat(lhs, rhs).alias("tok")),
+        fold,
     )
 
 
@@ -616,20 +626,25 @@ def _frozen_rule_fold(
             *[x for (rank, _l, r, _tok, _cnt) in merges for x in (F.lit(rank), F.lit(r))]
         )
 
+        # the min rank is bound once per step (and the encoded array once
+        # per row for the guard): lambda bodies are interpreted per
+        # element, so an expression written inside one re-runs per symbol
         def one_step(acc: F.Column, _i: F.Column) -> F.Column:
-            mr = _min_rank(acc, rank_map)
-            return F.when(mr.isNull(), acc).otherwise(
-                _apply_merge_dyn(
-                    acc,
-                    F.try_element_at(lhs_map, mr),
-                    F.try_element_at(rhs_map, mr),
-                )
+            return bind(
+                _min_rank(acc, rank_map),
+                lambda mr: F.when(mr.isNull(), acc).otherwise(
+                    _apply_merge_dyn(
+                        acc,
+                        F.try_element_at(lhs_map, mr),
+                        F.try_element_at(rhs_map, mr),
+                    )
+                ),
             )
 
         encoded = F.aggregate(
             F.sequence(F.lit(1), F.lit(len(merges))), syms0, one_step
         )
-        final_mr = _min_rank(encoded, rank_map)
+        final_mr = bind(encoded, lambda e: _min_rank(e, rank_map))
     # fixpoint guard: len(rules) iterations MUST consume every applicable
     # rank (see docstring); embedded as a required term of the caller's
     # counts so neither constant folding nor column pruning can drop it

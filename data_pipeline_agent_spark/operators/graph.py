@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_agent_spark.session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -156,7 +158,7 @@ def _cc_driver(e_in: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("node", ut, True), StructField("comp", ut, True)]
     )
-    return e_in.sparkSession.createDataFrame(out, schema)
+    return local_frame(e_in.sparkSession, out, schema)
 
 
 def _cc_rounds(e_in: DataFrame, max_iter: int, strict: bool, width: int) -> DataFrame:

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_agent_spark.functions import bind
+
 
 def asof_join(
     left: DataFrame,
@@ -190,12 +192,16 @@ def deletion_variants(s: Column, k: int = 2) -> Column:
             F.flatten(
                 F.transform(
                     F.sequence(F.lit(1), n - 1),
-                    lambda i: F.transform(
-                        F.sequence(i + 1, n),
-                        lambda j: F.concat(
-                            F.substr(s, F.lit(1), i - 1),
-                            F.substr(s, i + 1, j - i - 1),
-                            F.substr(s, j + 1, n),
+                    # the prefix before i is bound once per i, not per j
+                    lambda i: bind(
+                        F.substr(s, F.lit(1), i - 1),
+                        lambda pre: F.transform(
+                            F.sequence(i + 1, n),
+                            lambda j: F.concat(
+                                pre,
+                                F.substr(s, i + 1, j - i - 1),
+                                F.substr(s, j + 1, n),
+                            ),
                         ),
                     ),
                 )

@@ -22,6 +22,8 @@ from collections import Counter, defaultdict
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_agent_spark.session import local_frame
+
 
 def ordered_prefix(
     df: DataFrame,
@@ -598,7 +600,7 @@ def _exact_percentiles_passes(
         else:
             out.append(tl.value + (th.value - tl.value) * frac)
     schema = ", ".join(f"`{alias}` double" for alias, _, _, _ in brackets)
-    return spark.createDataFrame([tuple(out)], schema)
+    return local_frame(spark, [tuple(out)], schema)
 
 
 def grouped_ordered_prefix(
@@ -708,7 +710,8 @@ def grouped_ordered_prefix(
         f"`__g_{i}` {df.schema[c].dataType.simpleString()}"
         for i, c in enumerate(group_cols)
     )
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         off_rows,
         f"`__o_pid` int, {gschema}, `__off_n` bigint, `__off_s` double, "
         "`__off_nn` bigint, `__grp_n` bigint",
@@ -874,7 +877,7 @@ def grouped_exact_percentiles(
     if extra_schema:
         schema += ", " + extra_schema
     if not keys:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out_rows = []
     for c0 in range(0, len(keys), keys_per_pass):
         chunk = keys[c0 : c0 + keys_per_pass]
@@ -913,4 +916,4 @@ def grouped_exact_percentiles(
                 (k, *[float(v) if v is not None else None for v in vals])
                 + (extras[k] if extra_aggs else ())
             )
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)

@@ -5,8 +5,11 @@ Two paths, as a production ANN stack has:
 - brute-force cosine top-k: exact; cost O(|anchors| x corpus). The
   baseline and the oracle-checkable ground truth. Distributed as an
   anchor-broadcast join — corpus stays partitioned, anchors (small)
-  broadcast, per-row cosine is a codegen'd JVM expression (zip_with +
-  aggregate), ranking is a per-anchor window top-k.
+  broadcast, per-row cosine is a JVM expression (zip_with + aggregate;
+  interpreted, not code-generated — ``ArrayTransform``, ``ZipWith`` and
+  ``ArrayAggregate`` implement ``CodegenFallback``, checked with ``javap``
+  on ``spark-catalyst_2.13-4.1.2.jar``), ranking is a per-anchor window
+  top-k.
 - sign-LSH bucketed search: deterministic random-hyperplane surrogate
   using the sign pattern of the first SIGN_BITS dimensions as the bucket
   key. Probes only the anchor's bucket: recall < 1, cost O(corpus/2^bits)
@@ -21,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_agent_spark.session import fan_out
+from data_pipeline_agent_spark.functions import bind
+from data_pipeline_agent_spark.session import fan_out, local_frame
 
 SIGN_BITS = 8  # bucket key = sign pattern of the first 8 dims -> 256 buckets
 
@@ -226,6 +230,139 @@ def adaptive_rotations(bits: int, dim: int) -> int:
     return max(1, min(8, dim // bits))
 
 
+# Row bound of one kNN kernel group (queries plus candidates): knn_graph
+# sizes its tiles so the EXPECTED group holds half of it.
+KNN_TILE_ROWS = 8192
+# Query rows scored per numpy block inside a group: the pair accumulator
+# never exceeds _KNN_QUERY_BLOCK x (candidates in the group) doubles.
+_KNN_QUERY_BLOCK = 256
+# The kernel's group key: rotation, probed bucket, query tile, candidate tile.
+_KNN_GROUP = ("__rot", "__bkt", "__qt", "__ct")
+_KNN_ROW = ("__id", "__v", "__nrm", *_KNN_GROUP, "__q", "__c")
+
+
+def _knn_tile_rows(b: DataFrame, probe_keys: Column, tiles: int) -> DataFrame:
+    """Kernel input rows keyed on ``_KNN_GROUP``.
+
+    ``b`` holds one row per (vector, rotation) with its home ``__bkt``.
+    Each row is a query under every key of ``probe_keys`` (home first)
+    and a candidate under its home key only; ``__q``/``__c`` flag the two
+    roles. With ``tiles`` > 1 a vector's tile t = xxhash64(id) mod tiles
+    cuts each bucket into tiles x tiles groups: as a query the row goes to
+    (key, t, every ct), as a candidate to (home, every qt, t). The
+    (home, t, t) row carries both roles, so every in-bucket pair meets in
+    exactly one group, and with one tile a row is keyed once per probe."""
+    keyed = b.select(
+        "__id", "__v", "__nrm", "__rot",
+        F.pmod(F.xxhash64("__id"), F.lit(tiles)).cast("int").alias("__t"),
+        F.posexplode(probe_keys).alias("__p", "__bkt"),
+    )
+    every = F.explode(F.sequence(F.lit(0), F.lit(tiles - 1)))
+    queries = keyed.select(
+        "*", F.col("__t").alias("__qt"), every.alias("__ct"), F.lit(True).alias("__q")
+    ).withColumn("__c", (F.col("__p") == 0) & (F.col("__ct") == F.col("__qt")))
+    if tiles == 1:
+        return queries.select(*_KNN_ROW)
+    cands = (
+        keyed.where(F.col("__p") == 0)
+        .select("*", every.alias("__qt"), F.col("__t").alias("__ct"))
+        .where(F.col("__qt") != F.col("__ct"))
+        .select("*", F.lit(False).alias("__q"), F.lit(True).alias("__c"))
+    )
+    return queries.select(*_KNN_ROW).unionByName(cands.select(*_KNN_ROW))
+
+
+def _knn_block_kernel(k: int):
+    """The per-group scoring function for ``applyInArrow``.
+
+    Scores every (query, candidate) pair of a group, then emits only a
+    superset of each query's top-k: the pairs whose unrounded cosine is
+    within 1e-6 of the query's k-th best in the group, plus every pair
+    whose cosine is not finite (NULL in Spark: zero or NULL norm, NULL or
+    mismatched vectors). Spark ranks on round(cosine, 6), and rounding to
+    6 places moves a value by at most 5e-7, so a pair more than 1e-6
+    below k others cannot enter the rounded top-k.
+
+    The dot product accumulates ``acc += outer(Q[:, d], C[:, d])`` for
+    d = 0..dim-1: the same IEEE multiply-then-add sequence, in the same
+    order from the same 0.0 start, as ``dot``'s left fold, so every dot is
+    bit-identical to the fold. (A BLAS matrix product reorders the sum.)
+    Pairs whose vectors differ in length or hold a NULL get a NULL dot, as
+    ``zip_with`` makes them. The dot and the two carried norms are
+    emitted raw; Spark computes the rounded cosine from them.
+
+    A nested closure with worker-side imports: cloudpickle ships it by
+    value, so the package need not be importable on the executors."""
+    block = _KNN_QUERY_BLOCK
+
+    def kernel(table):
+        import numpy as np
+        import pyarrow as pa
+
+        n = table.num_rows
+        ids = table.column("__id").combine_chunks()
+        nrm = table.column("__nrm").combine_chunks()
+        vecs = table.column("__v").combine_chunks()
+        id_ok = ~ids.is_null().to_numpy(zero_copy_only=False)
+        idv = ids.fill_null(0).to_numpy()
+        norm = nrm.fill_null(float("nan")).to_numpy()
+        # dense (rows x max len) matrix; ``lens`` is -1 for a NULL vector,
+        # ``ok`` false for a NULL vector or one holding a NULL element
+        off = vecs.offsets.to_numpy()
+        lens = np.where(vecs.is_null().to_numpy(zero_copy_only=False), -1, np.diff(off))
+        m = np.maximum(lens, 0)
+        rows = np.repeat(np.arange(n), m)
+        pos = np.arange(len(rows)) - np.repeat(np.cumsum(m) - m, m)
+        src = off[:-1][rows] + pos
+        mat = np.zeros((n, int(m.max(initial=0))))
+        mat[rows, pos] = vecs.values.fill_null(0.0).to_numpy()[src]
+        ok = lens >= 0
+        ok[rows[vecs.values.is_null().to_numpy(zero_copy_only=False)[src]]] = False
+        qi = np.flatnonzero(table.column("__q").to_numpy() & id_ok)
+        ci = np.flatnonzero(table.column("__c").to_numpy() & id_ok)
+        ct = np.ascontiguousarray(mat[ci].T)
+        out_q, out_c = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+        out_dot, out_null = [np.zeros(0)], [np.zeros(0, bool)]
+        for lo in range(0, len(qi) if len(ci) else 0, block):
+            q = qi[lo : lo + block]
+            qt = np.ascontiguousarray(mat[q].T)
+            acc = np.zeros((len(q), len(ci)))
+            term = np.empty_like(acc)
+            for d in range(mat.shape[1]):
+                np.multiply.outer(qt[d], ct[d], out=term)
+                acc += term
+            valid = (
+                ok[q][:, None] & ok[ci][None, :] & (lens[q][:, None] == lens[ci][None, :])
+            )
+            other = idv[q][:, None] != idv[ci][None, :]
+            with np.errstate(all="ignore"):
+                cos = acc / (norm[q][:, None] * norm[ci][None, :])
+            finite = valid & np.isfinite(cos)
+            score = np.where(finite & other, cos, -np.inf)
+            if score.shape[1] > k:
+                kth = np.partition(score, -k, axis=1)[:, -k]
+            else:
+                kth = np.full(len(q), -np.inf)
+            keep = other & (~finite | (score >= (kth - 1e-6)[:, None]))
+            r, c = np.nonzero(keep)
+            out_q.append(q[r])
+            out_c.append(ci[c])
+            out_dot.append(acc[r, c])
+            out_null.append(~valid[r, c])
+        rq, rc = np.concatenate(out_q), np.concatenate(out_c)
+        return pa.table(
+            {
+                "query_id": ids.take(rq),
+                "neighbor_id": ids.take(rc),
+                "__dot": pa.array(np.concatenate(out_dot), mask=np.concatenate(out_null)),
+                "__qn": nrm.take(rq),
+                "__en": nrm.take(rc),
+            }
+        )
+
+    return kernel
+
+
 def knn_graph(
     emb: DataFrame,
     k: int = 3,
@@ -245,13 +382,34 @@ def knn_graph(
     clusters).
 
     Anchor-broadcast plans don't apply here (the anchor set IS the
-    corpus), so the scale shape is a sign-LSH bucketed SELF-join: both
-    sides shuffle once on the (rotation, bucket) key (co-partitioned
-    sort-merge join — no broadcast, no driver collect), candidates are
-    only within-bucket, and the per-query top-k window's input is
-    bounded by the query's bucket sizes. Cost is sum of squared bucket
-    sizes per rotation — the same regime every LSH stage in this package
-    runs — versus the N^2/p all-pairs a cross join would cost.
+    corpus), so the scale shape is sign-LSH bucketing: every vector row
+    shuffles once on its (rotation, bucket) keys, and each bucket is
+    scored as ONE blocked kernel (``applyInArrow`` over the group, the
+    grouped-map pattern): the group's query and candidate vectors become
+    two matrices, the dot products accumulate one dimension at a time in
+    the ``dot`` fold's order (bit-identical), and only a per-query top-k
+    superset leaves the kernel (``_knn_block_kernel``). No candidate pair
+    ever becomes a row carrying two vectors, and no pair is scored by the
+    interpreted per-element fold. Cost is sum of squared bucket sizes per
+    rotation — the same regime every LSH stage in this package runs —
+    versus the N^2/p all-pairs a cross join would cost. The rounded
+    cosine, the ranking, its ties and the cross-rotation dedup stay in
+    Spark, over the kernel's (query, neighbor, dot, norms) rows.
+
+    Group memory is bounded by tiles. A group holds the rows of one
+    (rotation, bucket) key, about (probes + 1) x (n >> bits) rows for
+    queries arriving from ``probes`` keys plus the candidates. When that
+    estimate exceeds half of ``KNN_TILE_ROWS`` (8192 rows, about 4 MB of
+    64-dim vectors), each bucket is cut into T hash tiles per side and
+    becomes T x T groups (``_knn_tile_rows``), so the expected group
+    holds at most half the bound and a pinned-bits bucket at 100 TB
+    scale never loads whole into one Python worker. The price is T-fold
+    row replication in the shuffle. Without a size estimate
+    (explicit ``bits`` and no ``n_hint``) a bucket is one tile. The
+    tiling is by estimate, not by measured bucket size, so a bucket many
+    times the mean can exceed the bound; inside a group the pair
+    accumulator stays at ``_KNN_QUERY_BLOCK`` query rows x the group's
+    candidates either way.
 
     Recall is bucket-granularity bound: a single sign projection
     recovers only ~2x the random-collision base rate of the true top-k
@@ -327,18 +485,13 @@ def knn_graph(
         ).cast("double"),
         F.lit(0.0),
     )
-    # Pre-cast the vector to array<double> ONCE PER ROW (r12 v2, guide
-    # §1.2 "per-task work"): the scoring fold's per-element
-    # ``x.cast("double")`` is evaluated per PAIR, and a row participates
-    # in ~bucket_size pairs — 128 interpreted cast calls per candidate
-    # that one projection-time transform replaces. float->double is
-    # exact (widening), so every cosine is bit-identical; the fold's
-    # inner casts become no-ops on the double input and SimplifyCasts
-    # drops them from the plan.
+    # The kernel multiplies doubles, as ``dot`` does after its
+    # per-element cast; float->double is exact (widening), so casting
+    # once per row keeps every dot bit-identical to the fold's.
     vd = F.col(vec_col).cast("array<double>")
     b = fan_out(emb).select(
-        F.col(id_col),
-        vd.alias(vec_col),
+        F.col(id_col).alias("__id"),
+        vd.alias("__v"),
         (row_norm(vd) + guard).alias("__nrm"),
         F.posexplode(
             F.array(
@@ -349,13 +502,9 @@ def knn_graph(
             )
         ).alias("__rot", "__bkt"),
     )
-    a = b.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        F.col("__nrm").alias("__qn"),
-        F.col("__rot"),
-        F.col("__bkt"),
-    )
+    # Query-side probe keys, home bucket first; the candidate side only
+    # ever sits in its home bucket.
+    probe_keys = F.array(F.col("__bkt"))
     if multiprobe:
         # flip-one-bit multi-probe (the other recall dial, r9): the QUERY
         # side additionally probes 1-Hamming neighbors of its home
@@ -383,20 +532,9 @@ def knn_graph(
         # (array_sort on (margin, bit) structs, ties by bit index), so
         # the DuckDB twin replays it exactly.
         if probe_t is None:
-            a = a.select(
-                "query_id",
-                "__qv",
-                "__qn",
-                "__rot",
-                F.explode(
-                    F.array(
-                        F.col("__bkt"),
-                        *[
-                            F.col("__bkt").bitwiseXOR(F.lit(1 << i))
-                            for i in range(bits)
-                        ],
-                    )
-                ).alias("__bkt"),
+            probe_keys = F.array(
+                F.col("__bkt"),
+                *[F.col("__bkt").bitwiseXOR(F.lit(1 << i)) for i in range(bits)],
             )
         else:
             if probe_t > bits:
@@ -411,7 +549,7 @@ def knn_graph(
                         lambda i: F.struct(
                             F.abs(
                                 F.try_element_at(
-                                    F.col("__qv"),
+                                    F.col("__v"),
                                     (F.col("__rot") * bits + i + 1).cast(
                                         "integer"
                                     ),
@@ -424,7 +562,7 @@ def knn_graph(
                 1,
                 probe_t,
             )
-            probe_arr = F.concat(
+            probe_keys = F.concat(
                 F.array(F.col("__bkt")),
                 F.transform(
                     flip_idx,
@@ -435,62 +573,46 @@ def knn_graph(
                     ),
                 ),
             )
-            a = a.select(
-                "query_id",
-                "__qv",
-                "__qn",
-                "__rot",
-                F.explode(probe_arr).alias("__bkt"),
-            )
-    e = b.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__ev"),
-        F.col("__nrm").alias("__en"),
-        F.col("__rot"),
-        F.col("__bkt"),
-    )
-    # both sides derive from the same projected scan; the equi-join keys
-    # them on (rotation, bucket), so Catalyst plans one shuffle per side
-    # (or a size-based broadcast at small SF) — never a cross join. Norms
-    # ride the projection (row_norm), so the pair stage is ONE dot per
-    # candidate instead of three.
+    # Tiles and kernel width from the expected candidate volume. A
+    # bucket holds ~n >> bits rows and a group ~(probes + 1) buckets'
+    # worth of rows (its queries, which arrive from up to ``probes`` keys
+    # each, plus its candidates); beyond half of KNN_TILE_ROWS the bucket
+    # is cut into ``tiles`` hash tiles per side. Half leaves room for
+    # bucket and hash skew under the bound.
     #
-    # Pair-volume-sized join width (r12 v2, guide §2.5/§5): AQE sizes the
-    # self-join's exchanges from its INPUT bytes and cannot see the
-    # output explosion (sum of squared bucket sizes) — at the sf10 tier
-    # it coalesced the join to a handful of partitions, so each task
-    # scored AND locally sorted tens of millions of pairs (sort spill:
-    # the second decade's super-linear term). The operator KNOWS the
-    # expected pair count (n, bits, rotations, probes — the bucket-probe
-    # histogram confirms the uniform estimate within ~1%), so when that
-    # estimate wants MORE tasks than the session default the join keys
-    # are pre-partitioned at the derived width (the CC width-sizing
-    # convention, r7/r8) and the join runs co-partitioned with no extra
-    # exchange; below the threshold the plan is untouched — small-SF
-    # plans keep AQE's coalescing, so local bench behavior is unchanged.
-    # Partitioning never changes results (deterministic ordering with
-    # the neighbor_id tie-break; the dedup is exact).
+    # Pair-volume-sized kernel width (r12 v2, guide §2.5/§5): AQE sizes
+    # the exchange from its INPUT bytes and cannot see that the kernel's
+    # work is the sum of squared bucket sizes, so the operator, which
+    # knows the expected pair count (the bucket-probe histogram confirms
+    # the uniform estimate within ~1%), fixes the width at that count /
+    # 2M and never below the session's parallelism. Partitioning never
+    # changes results (deterministic ordering with the neighbor_id
+    # tie-break; the dedup is exact).
+    default_par = emb.sparkSession.sparkContext.defaultParallelism
+    width, tiles = default_par, 1
     if n_known is not None:
         probes = 1
         if multiprobe:
             probes = (probe_t + 1) if probe_t is not None else (bits + 1)
-        est_pairs = n_known * rotations * probes * max(1, n_known >> bits)
-        default_par = emb.sparkSession.sparkContext.defaultParallelism
-        width = int(min(est_pairs // 2_000_000, 16384))
-        if width > default_par:
-            a = a.repartition(width, "__rot", "__bkt")
-            e = e.repartition(width, "__rot", "__bkt")
+        bucket = max(1, n_known >> bits)
+        est_pairs = n_known * rotations * probes * bucket
+        width = max(width, int(min(est_pairs // 2_000_000, 16384)))
+        tiles = -(-(probes + 1) * bucket // (KNN_TILE_ROWS // 2))
+    rows = _knn_tile_rows(b, probe_keys, tiles)
+    id_type = emb.schema[id_col].dataType.simpleString()
     scored = (
-        a.join(e, ["__rot", "__bkt"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
+        rows.repartition(width, *_KNN_GROUP)
+        .groupBy(*_KNN_GROUP)
+        .applyInArrow(
+            _knn_block_kernel(k),
+            f"query_id {id_type}, neighbor_id {id_type}, "
+            "__dot double, __qn double, __en double",
+        )
         .select(
             "query_id",
             "neighbor_id",
             F.round(
-                cosine_pre(
-                    dot(F.col("__qv"), F.col("__ev")), F.col("__qn"), F.col("__en")
-                ),
-                6,
+                cosine_pre(F.col("__dot"), F.col("__qn"), F.col("__en")), 6
             ).alias("cos_sim"),
         )
     )
@@ -509,11 +631,10 @@ def knn_graph(
         # copy of them); distinct + row_number over the survivors is
         # therefore bit-identical to the old distinct-then-rank. What it
         # buys: Spark's InsertWindowGroupLimit puts a PARTIAL
-        # WindowGroupLimit below the window's exchange, so each map task
-        # of the scored self-join emits only its local distinct-top-k per
-        # query instead of every scored pair — the pair set (the graph's
-        # widest intermediate, ~rotations x bucket_size per query) never
-        # crosses the network at all. The r12-v1 single-exchange form
+        # WindowGroupLimit below the window's exchange, so each kernel
+        # task emits only its local distinct-top-k per query instead of
+        # every per-group top-k superset it scored (~rotations x k per
+        # query). The r12-v1 single-exchange form
         # (repartition(query_id) + distinct) still shipped the FULL pair
         # set through its one exchange and hash-aggregated ~pairs/width
         # rows per reduce task, which is what turned the second decade
@@ -551,9 +672,12 @@ def int8_quantize(v: Column) -> Column:
     BigDecimal, C libraries round half away from zero; the floor form is
     unambiguous everywhere, which the DuckDB oracle twin relies on)."""
     amax = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
-    scale = F.lit(127.0) / amax
-    return F.transform(
-        v, lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long")
+    # the scale is bound once per vector, not re-derived per element
+    return bind(
+        F.lit(127.0) / amax,
+        lambda scale: F.transform(
+            v, lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long")
+        ),
     )
 
 
@@ -699,7 +823,7 @@ def ivf_assign(
         _KMEANS_CACHE[key] = model
     assigned = model.transform(vecs).select(id_col, vec_col, "__cell")
     centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cdf = emb.sparkSession.createDataFrame(centroids, "cell int, centroid array<double>")
+    cdf = local_frame(emb.sparkSession, centroids, "cell int, centroid array<double>")
     return assigned, cdf
 
 
@@ -921,30 +1045,37 @@ def _pq_code_expr(vec_col: str, books: list[list[list[float]]], s: int) -> Colum
     come from a transform over it — each centroid's squared distance is a
     zip_with/aggregate fold, so the expression tree is O(1) nodes per
     centroid instead of the O(subdim) unrolled polynomial the first
-    version codegen'd (the unrolled form compiled ~m*kc*subdim element_at
-    chains and dominated the query at 16 s of pure plan-compile time).
-    The argmin is array_position of the array_min (first occurrence ->
-    deterministic lowest-index tie-break); the fold adds terms in index
-    order, matching the old left-fold bit-for-bit. No UDF, no shuffle —
-    and still LINEAR in kc: a when/otherwise argmin fold would embed the
-    running best under every comparison (~2^k nodes — measured as a
-    driver OOM at k=16 before this form).
+    version code-generated (the unrolled form compiled ~m*kc*subdim
+    element_at chains and dominated the query at 16 s of pure plan-compile
+    time). The folds are interpreted, not code-generated: ``ArrayTransform``,
+    ``ZipWith`` and ``ArrayAggregate`` implement ``CodegenFallback`` (checked
+    with ``javap`` on ``spark-catalyst_2.13-4.1.2.jar``). So the subspace
+    slice is bound once per row (``sv``), not re-sliced per centroid, and
+    the distance array once (``d``), not once for the min and again for
+    its position. The argmin is array_position of the array_min (first
+    occurrence -> deterministic lowest-index tie-break); the fold adds
+    terms in index order, matching the old left-fold bit-for-bit. No UDF,
+    no shuffle — and still LINEAR in kc: a when/otherwise argmin fold
+    would embed the running best under every comparison (~2^k nodes —
+    measured as a driver OOM at k=16 before this form).
 
     r12: the whole expression is rendered as ONE SQL string and parsed
     JVM-side — the python-Column form crossed py4j per lambda/node
     (~35 ms x m calls of pure driver latency per query, guide §5); the
     parsed tree is the same expression (SQL lambdas are the same
-    LambdaFunction nodes), so codegen and results are unchanged."""
+    LambdaFunction nodes), so results are unchanged."""
     sub = len(books[s][0])
     sl = f"slice(`{vec_col}`, {s * sub + 1}, {sub})"
     cents = _render_doubles([[float(x) for x in c] for c in books[s]])
     darr = (
-        f"transform({cents}, c -> aggregate(zip_with({sl}, c, "
+        f"transform({cents}, c -> aggregate(zip_with(sv, c, "
         "(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
         "0.0D, (acc, v) -> acc + v))"
     )
+    argmin = "CAST(array_position(d, array_min(d)) - 1 AS INT)"
     return F.expr(
-        f"CAST(array_position({darr}, array_min({darr})) - 1 AS INT)"
+        f"element_at(transform(array({sl}), sv -> element_at("
+        f"transform(array({darr}), d -> {argmin}), 1)), 1)"
     )
 
 
@@ -964,8 +1095,9 @@ def pq_topk(
     100 TB the encoded corpus is the only thing scanned per query). Each
     anchor precomputes its distance table to every codebook centroid
     driver-side (m*kc floats), and a corpus row's approximate squared
-    distance is the SUM OF TABLE LOOKUPS on its codes — a codegen'd
-    element_at chain, no vector math in the scan. Encode + score are
+    distance is the SUM OF TABLE LOOKUPS on its codes — an interpreted
+    zip_with/aggregate fold of element_at lookups, no vector math in the
+    scan. Encode + score are
     shuffle-free; only the per-anchor top-k window shuffles (rows
     already pre-filtered to k per partition by the window's rank)."""
     books = pq_fit(emb, m, kc, seed, vec_col, id_col=id_col)
@@ -1205,7 +1337,8 @@ def ivfpq_topk(
         for _neg, cell in ranked[:nprobe]:
             qres = [q - c for q, c in zip(qv, cents[cell])]
             probe_rows.append((cell, int(ar[id_col]), _adc_table(qres, books)))
-    probe_df = emb.sparkSession.createDataFrame(
+    probe_df = local_frame(
+        emb.sparkSession,
         probe_rows,
         "__cell int, query_id bigint, __table array<array<double>>",
     )

@@ -269,6 +269,20 @@ def gopher_quality_flags(
     )
 
 
+def word_bigrams(w: Column) -> Column:
+    """Adjacent word 2-grams of the word array ``w`` in order, repeats
+    kept; empty for fewer than 2 words. Safe on its own: Spark's
+    ``sequence(1, 0)`` counts DOWN to [1, 0], and ``element_at(w, 0)``
+    raises, so the gram transform is reached only for >= 2 words."""
+    return F.when(
+        F.size(w) >= 2,
+        F.transform(
+            F.sequence(F.lit(1), F.size(w) - 1),
+            lambda i: F.concat_ws(" ", F.element_at(w, i), F.element_at(w, i + 1)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def repetition_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -301,10 +315,7 @@ def repetition_stats(
     def char_sum(arr):
         return F.aggregate(arr, zero, lambda acc, x: acc + F.length(x))
 
-    grams2 = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("__w") - 1, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.element_at("__w", i), F.element_at("__w", i + 1)),
-    )
+    grams2 = word_bigrams(F.col("__w"))
     # run-length scan over the sorted gram array: (prev, run) is the
     # current run, (bg, bc) the best closed run; strict > keeps the
     # lexicographically-first gram on count ties
@@ -469,11 +480,10 @@ def ngram_vocab_growth(
         word_ngrams,
     )
 
-    # token array staged as its own projection attribute BEFORE the
-    # n-gram transform references it 3x per gram position — passing the
-    # raw split() into word_ngrams embeds a COPY of the split subtree
-    # per element_at (the shingles() trap; measured 18 s -> ~4 s at
-    # sf0.1 for this operator)
+    # token array staged as its own projection attribute; word_ngrams
+    # also binds its input once per row, so an inline split() no longer
+    # re-runs per gram (the trap that cost 18 s vs ~4 s at sf0.1 here
+    # before the binding)
     staged = (
         fan_out(df)
         .select(

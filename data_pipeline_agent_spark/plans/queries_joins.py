@@ -21,7 +21,7 @@ from data_pipeline_agent_spark.operators.joins import (
 )
 from data_pipeline_agent_spark.operators.ranking import ordered_prefix
 from data_pipeline_agent_spark.plans.registry import register, table
-from data_pipeline_agent_spark.session import fan_out
+from data_pipeline_agent_spark.session import fan_out, local_frame
 
 # --- as-of join ---------------------------------------------------------------
 
@@ -100,7 +100,7 @@ PRICE_BANDS = [
 )
 def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_extendedprice")
-    bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
+    bands = local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     return (
         range_join(li, bands, F.col("l_extendedprice"))
         .groupBy("band")

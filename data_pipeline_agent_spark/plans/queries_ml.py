@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_agent_spark.plans.registry import register, table
+from data_pipeline_agent_spark.session import local_frame
 
 RF_FEATURES = ["l_quantity", "l_discount", "l_tax", "l_partkey", "l_suppkey"]
 
@@ -88,7 +89,8 @@ def _importance_contract_rows(imp: list[tuple[str, float]]) -> list[tuple]:
 )
 def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = _importance_contract_rows(_rf_importances(spark, sf_dir))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "feature string, importance_nonneg_ok boolean, "
         "not_all_equal_ok boolean, sum_to_one_ok boolean",

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_pipeline_agent_spark.plans.registry import register, table
-from data_pipeline_agent_spark.session import fan_out
+from data_pipeline_agent_spark.session import fan_out, local_frame
 
 
 @register(
@@ -247,8 +247,8 @@ def cms_heavy_hitters_partkey(spark: SparkSession, sf_dir: str) -> DataFrame:
                 est <= r["n_exact"] + bound,
             )
         )
-    return spark.createDataFrame(
-        rows, "l_partkey long, n_exact long, cms_ge_exact boolean, cms_within_eps boolean"
+    return local_frame(
+        spark, rows, "l_partkey long, n_exact long, cms_ge_exact boolean, cms_within_eps boolean"
     )
 
 

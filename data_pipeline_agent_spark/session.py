@@ -123,6 +123,30 @@ def fan_out(df, min_partitions: int | None = None):
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """``spark.createDataFrame(rows, schema)`` for a small driver-side row
+    list, built without Python worker tasks.
+
+    A list goes through ``parallelize`` plus a ``map(lambda x: x)`` that
+    ``RDD._reserialize`` adds, so every call starts Python workers (2-3 s
+    of CPU per call on a 4-core host). The same rows as a ``pyarrow``
+    table are decoded by the JVM itself. Values are converted with the
+    schema's own ``toInternal`` (dates to days, timestamps to epoch
+    microseconds), which is exactly Arrow's storage for those types, so
+    the frame holds the values the list path would."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    cols = list(zip(*(struct.toInternal(r) for r in rows))) or [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=to_arrow_type(f.dataType)) for f, c in zip(struct, cols)],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict:
     """Load every test table as a DataFrame dict and register temp views.
 

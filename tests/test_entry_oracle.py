@@ -71,10 +71,46 @@ def test_entry_smoke(spark):
     assert len(df.schema.fields) > 0
 
 
-def test_all_queries_have_unique_lowercase_aliases(spark):
-    for name, spec in REGISTRY.items():
-        df = spec.spark(spark, SF_DIR)
+@pytest.fixture(scope="module")
+def registry_frames(spark):
+    """Every registered query built once, shared by the plan checks."""
+    return {name: spec.spark(spark, SF_DIR) for name, spec in REGISTRY.items()}
+
+
+def test_all_queries_have_unique_lowercase_aliases(registry_frames):
+    for name, df in registry_frames.items():
         assert len(set(df.columns)) == len(df.columns), f"{name}: duplicate columns"
+
+
+def test_no_query_reevaluates_row_invariants_per_element(registry_frames):
+    """Lambda-invariance lint (tests/lambda_lint.py): no optimized plan may
+    hold a subtree of 4+ nodes inside a lambda body that reads none of
+    that lambda's variables. Spark interprets lambda bodies per element,
+    so such a subtree (a copied regex split, a per-centroid slice, a
+    per-vector scale, a rule lookup) re-runs for every element although
+    its value is fixed per row. No allowlist."""
+    from tests.lambda_lint import lambda_invariant_subtrees
+
+    hits = {
+        name: found
+        for name, df in registry_frames.items()
+        if (found := lambda_invariant_subtrees(df))
+    }
+    assert not hits, hits
+
+
+def test_word_ngrams_binds_inline_tokens_once(spark):
+    """word_ngrams over an inline ``tokens(lower(text))`` — the shape
+    source_boilerplate_share uses behind its localCheckpoint, where the
+    registry lint cannot see it — keeps the split out of the gram lambda."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_agent_spark.functions.text_hash import tokens, word_ngrams
+    from tests.lambda_lint import lambda_invariant_subtrees
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    df = docs.select(word_ngrams(tokens(F.lower(F.col("text"))), 5).alias("g"))
+    assert lambda_invariant_subtrees(df) == []
 
 
 def test_driver_contract_shape():

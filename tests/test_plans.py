@@ -116,13 +116,14 @@ def test_q6_filters_pushed_to_scan(spark):
 
 
 def test_source_token_stats_prunes_columns(spark):
-    # round 4: the tokenized frame is eagerly localCheckpointed (so the
+    # round 4: the tokenized frame is localCheckpointed (so the
     # exact_percentiles passes re-scan 16 bytes/doc instead of
-    # re-tokenizing). Pruning now shows up as the checkpoint holding ONLY
-    # (source, n_tokens): doc_id/lang/n_chars/text must not appear
-    # anywhere in the returned plan's scan outputs.
+    # re-tokenizing), and the passes run inside the builder: the returned
+    # plan is the driver-built result frame (session.local_frame, a
+    # LocalTableScan leaf). doc_id/lang/n_chars/text must not appear
+    # anywhere in it.
     txt = _formatted(REGISTRY["source_token_stats"].spark(spark, SF_DIR))
-    assert "ExistingRDD" in txt, "expected the checkpointed narrow frame"
+    assert "LocalTableScan" in txt, "expected the driver-built result frame"
     for leaked in ("n_chars", "doc_id", "lang"):
         assert leaked not in txt, f"unpruned column {leaked} in plan:\n{txt[:800]}"
 

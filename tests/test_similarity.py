@@ -449,38 +449,20 @@ def test_adaptive_rotations_formula():
         assert adaptive_rotations(bits, 64) * bits <= 64
 
 
-def test_knn_graph_dense_rank_prune_identical_and_map_side(spark):
-    """r12 v2 tail: the multi-rotation dedup runs as a dense_rank
-    group-limit BEFORE the window exchange (map-side prune) instead of
-    shipping the full scored pair set through repartition+distinct.
-
-    (a) Bit-identical output: dense_rank over (cos DESC, neighbor ASC)
-    counts DISTINCT pairs (cross-rotation duplicates share an order
-    tuple and cannot consume top-k slots), so prune -> distinct ->
-    row_number must equal the old distinct-then-row_number tail exactly
-    — asserted row-for-row against a reconstruction of the old tail
-    over the same scored pair stage, on a tier where duplicates are
-    guaranteed (rotations=4 over the 4-bit floor collides heavily).
-    (b) Plan shape: a partial WindowGroupLimit sits below the single
-    wide exchange, so each scored-join map task emits only its local
-    distinct top-k per query."""
+def _knn_pair_join_reference(emb, k, bits, rotations, multiprobe=False, probe_t=None):
+    """The pre-kernel kNN scoring stage: a (rotation, bucket) equi-join of
+    query probe keys to candidate home buckets, each pair scored by the
+    interpreted ``dot`` fold, then distinct + row_number top-k."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from data_pipeline_agent_spark.operators.similarity import (
         cosine_pre,
         dot,
-        knn_graph,
         row_norm,
         sign_bucket,
     )
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    k, bits, rotations = 3, 4, 4
-    got_df = knn_graph(emb, k=k, bits=bits, rotations=rotations)
-    got = sorted(map(tuple, got_df.collect()))
-
-    # old tail, reconstructed over the identical scored pair stage
     b = emb.select(
         F.col("vec_id"),
         F.col("embedding"),
@@ -494,12 +476,40 @@ def test_knn_graph_dense_rank_prune_identical_and_map_side(spark):
             )
         ).alias("__rot", "__bkt"),
     )
+    keys = F.array(F.col("__bkt"))
+    if multiprobe and probe_t is None:
+        keys = F.array(
+            F.col("__bkt"), *[F.col("__bkt").bitwiseXOR(1 << i) for i in range(bits)]
+        )
+    elif multiprobe:
+        margins = F.array_sort(
+            F.array(
+                *[
+                    F.struct(
+                        F.abs(
+                            F.element_at(
+                                "embedding", (F.col("__rot") * bits + i + 1).cast("int")
+                            ).cast("double")
+                        ).alias("m"),
+                        F.lit(i).alias("i"),
+                    )
+                    for i in range(bits)
+                ]
+            )
+        )
+        keys = F.concat(
+            F.array(F.col("__bkt")),
+            F.transform(
+                F.slice(margins, 1, probe_t),
+                lambda s: F.col("__bkt").bitwiseXOR(F.pow(F.lit(2.0), s["i"]).cast("long")),
+            ),
+        )
     a = b.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qv"),
         F.col("__nrm").alias("__qn"),
         "__rot",
-        "__bkt",
+        F.explode(keys).alias("__bkt"),
     )
     e = b.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -522,36 +532,153 @@ def test_knn_graph_dense_rank_prune_identical_and_map_side(spark):
             ).alias("cos_sim"),
         )
     )
-    # duplicates must actually exist for (a) to bite
-    n_pairs = scored.count()
-    n_distinct = scored.distinct().count()
-    assert n_pairs > n_distinct, "no cross-rotation collisions on this tier"
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
-    ref = sorted(
-        map(
-            tuple,
-            scored.repartition("query_id")
-            .distinct()
-            .withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "cos_sim",
-                F.col("rk").cast("long").alias("rk"),
-            )
-            .collect(),
+    return (
+        scored.distinct()
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "cos_sim",
+            F.col("rk").cast("long").alias("rk"),
         )
     )
-    assert got == ref
 
-    exec_txt = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in exec_txt, exec_txt[:2000]
-    # the partial group-limit must sit BELOW the exchange: Spark prints
-    # the partial mode's node above the final's, both present
-    assert exec_txt.count("WindowGroupLimit") >= 2, exec_txt[:2000]
+
+KNN_KERNEL_CASES = [
+    dict(k=3, bits=4, rotations=4),
+    dict(k=3, bits=4, rotations=2, multiprobe=True),
+    dict(k=3, bits=4, rotations=2, multiprobe=True, probe_t=2),
+    dict(k=4, bits=8, rotations=1),
+    dict(k=3, bits=2, rotations=3, tile_rows=64),
+    dict(k=2, bits=2, rotations=1, multiprobe=True, probe_t=1, tile_rows=64),
+]
+
+
+def test_knn_graph_dense_rank_prune_identical_and_map_side(spark, monkeypatch):
+    """The blocked kernel is bit-identical to the pair-join stage it
+    replaced, and no pair row is ever joined.
+
+    (a) Row-for-row equality with ``_knn_pair_join_reference`` (the old
+    equi-join + interpreted ``dot`` fold + distinct/row_number tail) over
+    the test vectors plus a zero-norm vector (NULL cosines) and exact
+    copies of existing vectors (cosine ties broken by neighbor_id), for
+    every ``KNN_KERNEL_CASES`` entry: plain with cross-rotation
+    duplicates, full-flip and probe_t multiprobe, tiny buckets where
+    k >= bucket size, and buckets forced across several tiles (a small
+    ``KNN_TILE_ROWS`` and 5-row query blocks). Where tiles are forced,
+    every kernel group stays within the tile bound.
+    (b) Plan shape: the executed plan runs the per-group Arrow kernel and
+    holds no join at all, so no candidate pair becomes a row before the
+    kernel has pruned it to a per-query top-k superset."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_agent_spark.operators import similarity as S
+    from tests.conftest import SF_DIR
+
+    base = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    dim = len(base.first()["embedding"])
+    zero = spark.createDataFrame(
+        [(10_000, [0.0] * dim)], "vec_id bigint, embedding array<float>"
+    )
+    dups = base.where(F.col("vec_id") < 20).select(
+        (F.col("vec_id") + 20_000).alias("vec_id"), "embedding"
+    )
+    emb = base.unionByName(zero).unionByName(dups).localCheckpoint(eager=True)
+    n = emb.count()
+
+    for case in KNN_KERNEL_CASES:
+        args = dict(case)
+        tile_rows = args.pop("tile_rows", None)
+        with monkeypatch.context() as mp:
+            groups = []
+            if tile_rows is not None:
+                mp.setattr(S, "KNN_TILE_ROWS", tile_rows)
+                mp.setattr(S, "_KNN_QUERY_BLOCK", 5)
+                tile_fn = S._knn_tile_rows
+                mp.setattr(
+                    S, "_knn_tile_rows", lambda *a: groups.append(tile_fn(*a)) or groups[-1]
+                )
+            got_df = S.knn_graph(emb, n_hint=n if tile_rows else None, **args)
+            got = sorted(map(tuple, got_df.collect()))
+        ref = sorted(map(tuple, _knn_pair_join_reference(emb, **args).collect()))
+        assert got == ref, case
+        assert any(r[2] is None for r in got), case
+        if tile_rows is not None:
+            (rows,) = groups
+            biggest, top_tile = (
+                rows.groupBy(*S._KNN_GROUP).count().agg(F.max("count"), F.max("__qt")).first()
+            )
+            assert top_tile >= 1, ("no bucket spans several tiles", case)
+            assert biggest <= tile_rows, (biggest, case)
+
+        exec_txt = got_df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInArrow" in exec_txt, exec_txt[:2000]
+        assert "Join" not in exec_txt, exec_txt[:2000]
+
+
+def test_knn_block_kernel_dots_are_the_left_fold(monkeypatch):
+    """The kNN kernel on one Arrow group, without Spark: every emitted
+    dot equals ``dot``'s left fold bit for bit (a reordered sum, as a BLAS
+    product makes, fails here long before it flips a 6-dp cosine), pairs
+    with a NULL element or unequal lengths get a NULL dot, no self pair is
+    emitted, and every query's rounded top-k is inside what it emits."""
+    import random
+
+    import pyarrow as pa
+
+    from data_pipeline_agent_spark.operators import similarity as S
+
+    rng = random.Random(7)
+    vecs = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(40)]
+    vecs += [list(vecs[0]), [0.0] * 16, [1.0] * 8, [0.5] * 15 + [None]]
+    ids = list(range(len(vecs)))
+
+    def fold(a, b):
+        if len(a) != len(b) or None in a or None in b:
+            return None
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def norm(v):
+        d = fold(v, v)
+        return None if d is None else d**0.5
+
+    k = 3
+    n = len(vecs)
+    table = pa.table(
+        {
+            "__id": pa.array(ids, pa.int64()),
+            "__v": pa.array(vecs, pa.list_(pa.float64())),
+            "__nrm": pa.array([norm(v) for v in vecs], pa.float64()),
+            "__q": pa.array([True] * n),
+            "__c": pa.array([True] * n),
+        }
+    )
+    for block in (256, 7):
+        monkeypatch.setattr(S, "_KNN_QUERY_BLOCK", block)
+        out = S._knn_block_kernel(k)(table).to_pylist()
+        got = {(r["query_id"], r["neighbor_id"]): r["__dot"] for r in out}
+        assert len(got) == len(out)
+        assert all(q != c for q, c in got)
+        for (q, c), d in got.items():
+            assert d == fold(vecs[q], vecs[c]) or (d is None and fold(vecs[q], vecs[c]) is None)
+        for q in ids:
+            scored = []
+            for c in ids:
+                d, nq, nc = fold(vecs[q], vecs[c]), norm(vecs[q]), norm(vecs[c])
+                cos = None if d is None or not nq or not nc else round(d / (nq * nc), 6)
+                if c != q:
+                    scored.append((cos is None, -(cos or 0.0), c))
+            for _null, _neg, c in sorted(scored)[:k]:
+                assert (q, c) in got, (q, c)
 
 
 def test_knn_graph_multiprobe_beats_plain_and_clears_floor(spark):

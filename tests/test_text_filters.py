@@ -69,6 +69,21 @@ def test_repetition_stats_rowlocal_edges(spark):
     assert out[4]["top_2gram"] == "a b" and out[4]["top_2gram_count"] == 2
 
 
+def test_word_bigrams_safe_without_guard(spark):
+    """word_bigrams evaluated on its own (no size guard around it) is
+    empty for 0- and 1-word arrays instead of probing index 0, and keeps
+    repeats in order otherwise."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_agent_spark.operators.text import word_bigrams
+
+    df = spark.createDataFrame(
+        [(0, []), (1, ["one"]), (2, ["a", "b", "a", "b"])], "id int, w array<string>"
+    )
+    got = {r["id"]: r["g"] for r in df.select("id", word_bigrams(F.col("w")).alias("g")).collect()}
+    assert got == {0: [], 1: [], 2: ["a b", "b a", "a b"]}
+
+
 def test_repetition_stats_matches_naive_reference(spark):
     """Randomized (seeded) equivalence of the r13 row-local rewrite
     against a naive Counter-based reference of the ORIGINAL definition
