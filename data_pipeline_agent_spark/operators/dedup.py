@@ -51,11 +51,7 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> D
     """(id, grams array, n_grams) — distinct word 3-gram shingles.
 
     The token array is staged as its own projection attribute so the
-    size filter below can read it. ``word_ngrams`` binds its input once
-    per row itself, so an inline split() would no longer re-run per gram
-    (before that binding it re-ran O(n_grams) times per row: lambda
-    bodies are interpreted per element and subexpression elimination
-    does not reach inside them — measured 14x slower at sf0.1).
+    size filter below can read it.
 
     The non-empty filter is expressed as ``size(toks) >= n`` (equivalent:
     >= n tokens <=> >= 1 shingle) BEFORE the n-gram projection — a

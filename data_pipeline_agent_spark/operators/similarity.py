@@ -298,13 +298,16 @@ def _knn_block_kernel(k: int):
     def kernel(table):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         n = table.num_rows
         ids = table.column("__id").combine_chunks()
         nrm = table.column("__nrm").combine_chunks()
         vecs = table.column("__v").combine_chunks()
-        id_ok = ~ids.is_null().to_numpy(zero_copy_only=False)
-        idv = ids.fill_null(0).to_numpy()
+        # ids compared by dictionary code: any id type, NULL ids never pair
+        codes = pc.dictionary_encode(ids).indices
+        id_ok = codes.is_valid().to_numpy(zero_copy_only=False)
+        code = codes.fill_null(-1).to_numpy()
         norm = nrm.fill_null(float("nan")).to_numpy()
         # dense (rows x max len) matrix; ``lens`` is -1 for a NULL vector,
         # ``ok`` false for a NULL vector or one holding a NULL element
@@ -334,7 +337,7 @@ def _knn_block_kernel(k: int):
             valid = (
                 ok[q][:, None] & ok[ci][None, :] & (lens[q][:, None] == lens[ci][None, :])
             )
-            other = idv[q][:, None] != idv[ci][None, :]
+            other = code[q][:, None] != code[ci][None, :]
             with np.errstate(all="ignore"):
                 cos = acc / (norm[q][:, None] * norm[ci][None, :])
             finite = valid & np.isfinite(cos)

@@ -480,17 +480,9 @@ def ngram_vocab_growth(
         word_ngrams,
     )
 
-    # token array staged as its own projection attribute; word_ngrams
-    # also binds its input once per row, so an inline split() no longer
-    # re-runs per gram (the trap that cost 18 s vs ~4 s at sf0.1 here
-    # before the binding)
-    staged = (
-        fan_out(df)
-        .select(
-            F.col(id_col).alias("__id"),
-            tokens(F.lower(F.col(text_col))).alias("__toks"),
-        )
-        .select("__id", word_ngrams(F.col("__toks"), n).alias("__grams"))
+    staged = fan_out(df).select(
+        F.col(id_col).alias("__id"),
+        word_ngrams(tokens(F.lower(F.col(text_col))), n).alias("__grams"),
     )
     bounds = staged.agg(
         F.min("__id").alias("__lo"), F.max("__id").alias("__hi")

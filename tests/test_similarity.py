@@ -1,6 +1,9 @@
 """IVF approximate-NN tests: recall floor vs brute force; exact when
 probing every cell."""
 
+import os
+
+
 def test_ivf_recall_vs_bruteforce(spark):
     from pyspark.sql import functions as F
 
@@ -452,7 +455,9 @@ def test_adaptive_rotations_formula():
 def _knn_pair_join_reference(emb, k, bits, rotations, multiprobe=False, probe_t=None):
     """The pre-kernel kNN scoring stage: a (rotation, bucket) equi-join of
     query probe keys to candidate home buckets, each pair scored by the
-    interpreted ``dot`` fold, then distinct + row_number top-k."""
+    interpreted ``dot`` fold, then distinct + row_number top-k. Returns
+    the scored pair stage (cross-rotation duplicates included) and the
+    top-k frame."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -535,7 +540,7 @@ def _knn_pair_join_reference(emb, k, bits, rotations, multiprobe=False, probe_t=
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
     )
-    return (
+    return scored, (
         scored.distinct()
         .withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
@@ -563,31 +568,42 @@ def test_knn_graph_dense_rank_prune_identical_and_map_side(spark, monkeypatch):
     replaced, and no pair row is ever joined.
 
     (a) Row-for-row equality with ``_knn_pair_join_reference`` (the old
-    equi-join + interpreted ``dot`` fold + distinct/row_number tail) over
-    the test vectors plus a zero-norm vector (NULL cosines) and exact
-    copies of existing vectors (cosine ties broken by neighbor_id), for
-    every ``KNN_KERNEL_CASES`` entry: plain with cross-rotation
-    duplicates, full-flip and probe_t multiprobe, tiny buckets where
-    k >= bucket size, and buckets forced across several tiles (a small
-    ``KNN_TILE_ROWS`` and 5-row query blocks). Where tiles are forced,
-    every kernel group stays within the tile bound.
+    equi-join + interpreted ``dot`` fold + distinct/row_number tail) on
+    the sf0.01 vectors and on the test tier's, each plus a zero-norm
+    vector (NULL cosines) and exact copies of existing vectors (cosine
+    ties broken by neighbor_id), for every ``KNN_KERNEL_CASES`` entry:
+    plain with cross-rotation duplicates, full-flip and probe_t
+    multiprobe, tiny buckets where k >= bucket size, and buckets forced
+    across several tiles (a small ``KNN_TILE_ROWS`` and 5-row query
+    blocks). Every multi-rotation case's scored pair stage must hold
+    cross-rotation duplicates, so the dense_rank/distinct dedup is
+    exercised. Where tiles are forced, every kernel group stays within
+    the tile bound.
     (b) Plan shape: the executed plan runs the per-group Arrow kernel and
     holds no join at all, so no candidate pair becomes a row before the
     kernel has pruned it to a per-query top-k superset."""
-    from pyspark.sql import functions as F
-
     from data_pipeline_agent_spark.operators import similarity as S
     from tests.conftest import SF_DIR
 
-    base = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
+    tiers = sorted({os.path.join(os.path.dirname(SF_DIR), "sf0.01"), SF_DIR})
+    for sf_dir in tiers:
+        _check_knn_kernel_cases(spark, monkeypatch, S, sf_dir)
+
+
+def _check_knn_kernel_cases(spark, monkeypatch, S, sf_dir):
+    from pyspark.sql import functions as F
+
+    base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
+    # ids past the tier's own, so the added rows never collide with it
+    top = base.agg(F.max("vec_id")).first()[0] + 1
     dim = len(base.first()["embedding"])
     zero = spark.createDataFrame(
-        [(10_000, [0.0] * dim)], "vec_id bigint, embedding array<float>"
+        [(top, [0.0] * dim)], "vec_id bigint, embedding array<float>"
     )
     dups = base.where(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 20_000).alias("vec_id"), "embedding"
+        (F.col("vec_id") + top + 1).alias("vec_id"), "embedding"
     )
     emb = base.unionByName(zero).unionByName(dups).localCheckpoint(eager=True)
     n = emb.count()
@@ -606,8 +622,15 @@ def test_knn_graph_dense_rank_prune_identical_and_map_side(spark, monkeypatch):
                 )
             got_df = S.knn_graph(emb, n_hint=n if tile_rows else None, **args)
             got = sorted(map(tuple, got_df.collect()))
-        ref = sorted(map(tuple, _knn_pair_join_reference(emb, **args).collect()))
-        assert got == ref, case
+        ref_scored, ref_df = _knn_pair_join_reference(emb, **args)
+        if args["rotations"] > 1:
+            assert ref_scored.count() > ref_scored.distinct().count(), (
+                "no cross-rotation duplicates",
+                sf_dir,
+                case,
+            )
+        ref = sorted(map(tuple, ref_df.collect()))
+        assert got == ref, (sf_dir, case)
         assert any(r[2] is None for r in got), case
         if tile_rows is not None:
             (rows,) = groups
@@ -620,6 +643,28 @@ def test_knn_graph_dense_rank_prune_identical_and_map_side(spark, monkeypatch):
         exec_txt = got_df._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInArrow" in exec_txt, exec_txt[:2000]
         assert "Join" not in exec_txt, exec_txt[:2000]
+
+
+def test_knn_graph_string_ids_match_integer_ids(spark):
+    """``id_col`` may be any comparable type, as it was for the pair
+    join: string ids, zero-padded so they sort as the integers do, give
+    exactly the integer-id graph."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_agent_spark.operators.similarity import knn_graph
+    from tests.conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+    def pad(c):
+        return F.lpad(F.col(c).cast("string"), 12, "0").alias(c)
+
+    want = knn_graph(emb, k=3, bits=4, rotations=2).select(
+        pad("query_id"), pad("neighbor_id"), "cos_sim", "rk"
+    )
+    got = knn_graph(emb.withColumn("vec_id", pad("vec_id")), k=3, bits=4, rotations=2)
+    assert got.schema["query_id"].dataType.simpleString() == "string"
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_knn_block_kernel_dots_are_the_left_fold(monkeypatch):
