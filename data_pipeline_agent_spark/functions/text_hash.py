@@ -91,12 +91,6 @@ def minhash_from_hashes(hashes: Column, j: int) -> Column:
     )
 
 
-def minhash_expr(grams: Column, j: int) -> Column:
-    """j-th minhash from raw shingles (convenience; prefer the _from_hashes
-    form when computing the full signature)."""
-    return minhash_from_hashes(h32_array(grams), j)
-
-
 def simhash32_from_hashes(hashes: Column) -> Column:
     """32-bit SimHash over precomputed shingle hashes: bit k is 1 iff more
     hashes have bit k set than unset."""
@@ -112,7 +106,3 @@ def simhash32_from_hashes(hashes: Column) -> Column:
     for k, v in enumerate(votes):
         out = out + F.when(v > 0, F.lit(1 << k)).otherwise(F.lit(0)).cast("long")
     return out
-
-
-def simhash32(grams: Column) -> Column:
-    return simhash32_from_hashes(h32_array(grams))

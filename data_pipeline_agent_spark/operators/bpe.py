@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 
 from data_pipeline_agent_spark.functions import bind
 from data_pipeline_agent_spark.functions.text_hash import tokens
-from data_pipeline_agent_spark.session import local_frame
+from data_pipeline_agent_spark.session import fit_memo, local_frame
 
 # Words entering BPE training: lowercase ASCII alphanumeric only. This is
 # a *scope* choice, not a shortcut: it pins Spark's UTF-16-code-unit
@@ -70,40 +70,28 @@ MERGES_SCHEMA = StructType(
     ]
 )
 
-# Frozen tokenizers — (merge rules, segmented vocab frame) keyed
-# (applicationId, training-corpus plan hash, n_merges, text_col, batch).
-# The train-once / apply-many convention (r12; the similarity stack's
-# _KMEANS_CACHE precedent, endorsed r11): a production pipeline trains
-# its tokenizer ONCE and every encode/pack/fertility pass loads the
-# frozen rules — retraining per query re-ran the full merge loop on
-# every invocation. Only the APPLY-path operators (bpe_fertility,
-# bpe_encode_unseen, bpe_tokenize_records) consume this cache; the
-# rule-emitting queries (bpe_train, bpe_merges_with_approx_contract)
-# always train live — their OUTPUT is the training result, and caching
-# it would be result-memoization, not model reuse. The trainer is
-# deterministic (argmax tie-breaks, ORDER-BY-free but plan-hash-keyed
-# inputs), so a cache hit returns exactly what a retrain would. The
-# cache OWNS the vocab frames' lifetime: entries are vocab-sized
-# (Heaps'-law bounded) checkpointed frames, never unpersisted by
-# consumers.
-_FROZEN_CACHE: dict = {}
-
-
 def _train_frozen(
     docs: DataFrame, n_merges: int, text_col: str, batch: int
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    key = (
-        docs.sparkSession.sparkContext.applicationId,
-        docs.semanticHash(),
-        n_merges,
-        text_col,
-        batch,
+    """Frozen tokenizer — (merge rules, segmented vocab frame), memoized
+    per training corpus and dials by ``session.fit_memo``.
+
+    A production pipeline trains its tokenizer ONCE and every
+    encode/pack/fertility pass loads the frozen rules. Only the
+    APPLY-path operators (bpe_fertility, bpe_encode_unseen,
+    bpe_tokenize_records) come here; the rule-emitting queries
+    (bpe_train, bpe_merges_with_approx_contract) always train live —
+    their OUTPUT is the training result, and caching it would be
+    result-memoization, not model reuse. The trainer is deterministic
+    (argmax tie-breaks), so a hit returns exactly what a retrain would.
+    The memo OWNS the vocab frames' lifetime: entries are vocab-sized
+    (Heaps'-law bounded) checkpointed frames, never unpersisted by
+    consumers."""
+    return fit_memo(
+        docs,
+        ("bpe", n_merges, text_col, batch),
+        lambda: _train(docs, n_merges, text_col, batch=batch),
     )
-    hit = _FROZEN_CACHE.get(key)
-    if hit is None:
-        hit = _train(docs, n_merges, text_col, batch=batch)
-        _FROZEN_CACHE[key] = hit
-    return hit
 
 
 def word_freq(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -177,12 +165,6 @@ def _apply_merges(
             step,
         )
     )
-
-
-def _apply_merge(syms: F.Column, lhs: str, rhs: str) -> F.Column:
-    """Greedy left-to-right merge of adjacent (lhs, rhs) in a symbol
-    list — the single-rule case of _apply_merges."""
-    return _apply_merges(syms, [(lhs, rhs)])
 
 
 def _select_batch(
@@ -738,7 +720,7 @@ def bpe_fertility(
     Words outside BPE_WORD_RE never trained and are excluded here too
     (fertility over the trainable subset; documented scope choice).
     """
-    # frozen-tokenizer cache (r12): see _FROZEN_CACHE
+    # frozen tokenizer: see _train_frozen
     _merges, vocab = _train_frozen(docs, n_merges, text_col, batch)
     seg = vocab.select("word", F.size("syms").alias("__nsub"))
     # pre-aggregate to (doc, word, cnt) BEFORE the vocab join (r10, r9
@@ -803,7 +785,7 @@ def bpe_tokenize_records(
     ``rec_id_cols`` + (n_words, n_bpe_tokens); records with zero
     in-scope words are absent (inner map-back join), matching the twin.
     """
-    # frozen-tokenizer cache (r12): see _FROZEN_CACHE
+    # frozen tokenizer: see _train_frozen
     merges, vocab = _train_frozen(docs, n_merges, text_col, batch)
     occurrences = (
         recs.select(

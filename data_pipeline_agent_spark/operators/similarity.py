@@ -1,22 +1,22 @@
 """Vector similarity search over an embedding column (array<float>).
 
-Two paths, as a production ANN stack has:
+- Exact: ``brute_force_topk`` (anchor broadcast join, per-anchor top-k
+  window), the ground truth every approximate path is gated against.
+- Sign-LSH buckets: ``lsh_bucketed_topk`` for anchors,
+  ``embedding_near_dup_pairs`` for within-bucket pairs, and
+  ``knn_graph``, the all-points graph scored per bucket in a numpy
+  kernel (rotations, multi-probe, tiles).
+- IVF: ``ivf_assign`` (KMeans cells), ``ivf_topk``, and
+  ``semantic_dup_pairs`` (SemDeDup within cells).
+- Quantized: ``quantized_topk`` (int8), ``pq_fit``/``pq_topk`` (product
+  codes, ADC tables) and ``ivfpq_topk`` (residual codes in IVF cells,
+  optional exact re-rank).
 
-- brute-force cosine top-k: exact; cost O(|anchors| x corpus). The
-  baseline and the oracle-checkable ground truth. Distributed as an
-  anchor-broadcast join — corpus stays partitioned, anchors (small)
-  broadcast, per-row cosine is a JVM expression (zip_with + aggregate;
-  interpreted, not code-generated — ``ArrayTransform``, ``ZipWith`` and
-  ``ArrayAggregate`` implement ``CodegenFallback``, checked with ``javap``
-  on ``spark-catalyst_2.13-4.1.2.jar``), ranking is a per-anchor window
-  top-k.
-- sign-LSH bucketed search: deterministic random-hyperplane surrogate
-  using the sign pattern of the first SIGN_BITS dimensions as the bucket
-  key. Probes only the anchor's bucket: recall < 1, cost O(corpus/2^bits)
-  per anchor. At 100 TB you'd store the corpus bucketed (partitionBy
-  bucket) so a probe is a partition-pruned scan. MLlib's
-  BucketedRandomProjectionLSH is the stock alternative; fixed sign planes
-  keep the pipeline reproducible across engines and runs.
+Per-pair math is a ``zip_with``/``aggregate`` fold over double arrays,
+interpreted, not code-generated (``ZipWith`` and ``ArrayAggregate``
+implement ``CodegenFallback``), so vectors are cast and row norms
+computed once per row and carried into the pair stage. Fits (KMeans
+cells, PQ codebooks) are memoized per input plan (``session.fit_memo``).
 """
 
 from __future__ import annotations
@@ -25,23 +25,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_agent_spark.functions import bind
-from data_pipeline_agent_spark.session import fan_out, local_frame
+from data_pipeline_agent_spark.session import fan_out, fit_memo, local_frame
 
 SIGN_BITS = 8  # bucket key = sign pattern of the first 8 dims -> 256 buckets
-
-# fitted coarse-quantizer models, keyed (applicationId, plan hash, k, seed);
-# each entry is a handful of centroid vectors — negligible driver memory
-_KMEANS_CACHE: dict = {}
-
-# fitted PQ codebooks, keyed (applicationId, plan hash, dials) — the same
-# fit-once-serve-many convention as _KMEANS_CACHE (r12, VERDICT r11 task 2):
-# a production PQ index trains its codebooks once and every probe reuses
-# them; refitting per query re-ran the bounded sample collect plus m
-# driver-side Lloyd fits on every invocation. The fit sample is ORDER BY id
-# (deterministic), so the cached books are exactly what a refit would
-# produce — results are unchanged, only the repeated fit cost goes.
-# Each entry is m*kc*(dim/m) floats — a few KB.
-_PQ_BOOKS_CACHE: dict = {}
 
 
 def _render_doubles(value) -> str:
@@ -71,7 +57,7 @@ def lit_doubles(value) -> Column:
     return F.expr(_render_doubles(value))
 
 
-def dot(a: Column, b: Column) -> Column:
+def dot(a: Column | str, b: Column | str) -> Column:
     """Left-to-right double-accumulated dot product (deterministic)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -103,6 +89,26 @@ def cosine_pre(dot_ab: Column, na: Column, nb: Column) -> Column:
     """cosine from a pair dot product and the two carried row norms —
     the factored twin of ``cosine()`` (identical arithmetic/order)."""
     return F.try_divide(dot_ab, na * nb)
+
+
+def _pair_cos(dot_ab: Column, na: Column | str, nb: Column | str) -> Column:
+    """The score a ranked pair carries: ``cosine_pre`` rounded to 6
+    places. Norms are columns or column names."""
+    na, nb = (F.col(c) if isinstance(c, str) else c for c in (na, nb))
+    return F.round(cosine_pre(dot_ab, na, nb), 6)
+
+
+def _rank_topk(scored: DataFrame, score: str, k: int, descending: bool = True) -> DataFrame:
+    """The first ``k`` (query_id, neighbor_id, score, rk) rows per query,
+    ranked on ``score`` (highest first, or lowest when not
+    ``descending``), ties to the lower neighbor_id."""
+    order = F.desc(score) if descending else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", score, F.col("rk").cast("long").alias("rk"))
+    )
 
 
 def sign_bucket(v: Column, bits: int = SIGN_BITS, offset: int = 0) -> Column:
@@ -150,19 +156,9 @@ def brute_force_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pre(
-                dot(F.col("__qv"), F.col(vec_col)), F.col("__qn"), F.col("__en")
-            ),
-            6,
-        ).alias("cos_sim"),
+        _pair_cos(dot("__qv", vec_col), "__qn", "__en").alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rk").cast("long").alias("rk"))
-    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def lsh_bucketed_topk(
@@ -193,19 +189,9 @@ def lsh_bucketed_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pre(
-                dot(F.col("__qv"), F.col(vec_col)), F.col("__qn"), F.col("__en")
-            ),
-            6,
-        ).alias("cos_sim"),
+        _pair_cos(dot("__qv", vec_col), "__qn", "__en").alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", F.col("rk").cast("long").alias("rk"))
-    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def adaptive_bits(n: int, target_bucket: int = 500) -> int:
@@ -614,12 +600,9 @@ def knn_graph(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(
-                cosine_pre(F.col("__dot"), F.col("__qn"), F.col("__en")), 6
-            ).alias("cos_sim"),
+            _pair_cos(F.col("__dot"), "__qn", "__en").alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     if rotations > 1:
         # a pair can collide in several rotations; dedupe on the narrow
         # (ids, score) grain — the vectors never enter this shuffle, and
@@ -651,19 +634,14 @@ def knn_graph(
         # partitioning: the distinct and the row_number window both ride
         # the dense_rank window's exchange, so the plan keeps exactly ONE
         # wide exchange.
+        w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
         scored = (
             scored.withColumn("__dr", F.dense_rank().over(w))
             .where(F.col("__dr") <= k)
             .drop("__dr")
             .distinct()
         )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id", "neighbor_id", "cos_sim", F.col("rk").cast("long").alias("rk")
-        )
-    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def int8_quantize(v: Column) -> Column:
@@ -715,19 +693,9 @@ def quantized_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pre(
-                dot(F.col("__qa"), F.col("__q")), F.col("__qn"), F.col("__en")
-            ),
-            6,
-        ).alias("qcos_sim"),
+        _pair_cos(dot("__qa", "__q"), "__qn", "__en").alias("qcos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "qcos_sim", F.col("rk").cast("long").alias("rk"))
-    )
+    return _rank_topk(scored, "qcos_sim", k)
 
 
 def embedding_near_dup_pairs(emb: DataFrame, topk: int = 10) -> DataFrame:
@@ -758,12 +726,7 @@ def embedding_near_dup_pairs(emb: DataFrame, topk: int = 10) -> DataFrame:
         pairs.select(
             "id_a",
             "id_b",
-            F.round(
-                cosine_pre(
-                    dot(F.col("va"), F.col("vb")), F.col("__na"), F.col("__nb")
-                ),
-                6,
-            ).alias("cos_sim"),
+            _pair_cos(dot("va", "vb"), "__na", "__nb").alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.asc("id_a"), F.asc("id_b"))
         .limit(topk)
@@ -784,46 +747,34 @@ def ivf_assign(
     ``partitionBy(__cell)`` so a probe scans only nprobe partitions —
     the same pruning story as the sign-LSH path but data-adaptive."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     vecs = fan_out(emb).select(
         F.col(id_col), F.col(vec_col), array_to_vector(F.col(vec_col)).alias("__fv")
     )
     # KMeans fits on a seeded sample: centroid quality saturates far below
-    # full data and the fit is the only non-single-pass step.  The fitted
-    # model is memoized per (session, input-plan, k, seed): a production IVF
-    # index trains its coarse quantizer once and reuses it for every probe
-    # and for the semantic-dedup pass — refitting per query would redo the
-    # only iterative job in the stack.
-    key = (
-        emb.sparkSession.sparkContext.applicationId,
-        emb.semanticHash(),
-        n_centroids,
-        seed,
+    # full data and the fit is the only non-single-pass step. A production
+    # IVF index trains its coarse quantizer once and reuses it for every
+    # probe and for the semantic-dedup pass, hence the memo.
+    #
+    # maxIter=8 (default 20): a coarse quantizer only needs cells that
+    # roughly tessellate the space — assignment quality saturates within
+    # a few Lloyd rounds and the recall-floor test gates the outcome;
+    # the extra rounds are the single most expensive non-query cost in
+    # the ANN stack at any scale.
+    #
+    # Deterministic fit sample: ORDER BY id, the pq_fit convention (r11).
+    # A bare limit hands KMeans whichever rows' tasks finish first, so the
+    # fitted centroids — and every recall number measured against them —
+    # silently varied ACROSS SESSIONS. TakeOrdered on a bounded k: a few
+    # MB on the driver at any scale.
+    model = fit_memo(
+        emb,
+        ("kmeans", n_centroids, seed, id_col, vec_col),
+        lambda: KMeans(
+            k=n_centroids, seed=seed, maxIter=8, featuresCol="__fv", predictionCol="__cell"
+        ).fit(vecs.orderBy(id_col).limit(100_000)),
     )
-    model = _KMEANS_CACHE.get(key)
-    if model is None:
-        # maxIter=8 (default 20): a coarse quantizer only needs cells that
-        # roughly tessellate the space — assignment quality saturates within
-        # a few Lloyd rounds and the recall-floor test gates the outcome;
-        # the extra rounds are the single most expensive non-query cost in
-        # the ANN stack at any scale
-        km = KMeans(
-            k=n_centroids,
-            seed=seed,
-            maxIter=8,
-            featuresCol="__fv",
-            predictionCol="__cell",
-        )
-        # deterministic fit sample: ORDER BY id, the pq_fit convention
-        # (r11). A bare limit hands KMeans whichever rows' tasks finish
-        # first, so the fitted centroids — and every recall number
-        # measured against them — silently varied ACROSS SESSIONS (the
-        # r10 ivfpq recall was recorded at 0.42 on sf0.1 and reproduced
-        # at 0.26 a session later, same code, same data). TakeOrdered on
-        # a bounded k: a few MB on the driver pipeline at any scale.
-        model = km.fit(vecs.orderBy(id_col).limit(100_000))
-        _KMEANS_CACHE[key] = model
     assigned = model.transform(vecs).select(id_col, vec_col, "__cell")
     centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
     cdf = local_frame(emb.sparkSession, centroids, "cell int, centroid array<double>")
@@ -872,18 +823,9 @@ def ivf_topk(
     scored = pairs.select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
-        F.round(
-            cosine_pre(
-                dot(F.col("__qv"), F.col(vec_col)), F.col("__qn"), F.col("__en")
-            ),
-            6,
-        ).alias("cos_sim"),
+        _pair_cos(dot("__qv", vec_col), "__qn", "__en").alias("cos_sim"),
     )
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(wk).cast("long"))
-        .where(F.col("rk") <= k)
-    )
+    return _rank_topk(scored, "cos_sim", k)
 
 
 def semantic_dup_pairs(
@@ -928,34 +870,9 @@ def semantic_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                cosine_pre(
-                    dot(F.col("__va"), F.col("__vb")), F.col("__na"), F.col("__nb")
-                ),
-                6,
-            ).alias("cos_sim"),
+            _pair_cos(dot("__va", "__vb"), "__na", "__nb").alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
-    )
-
-
-def semantic_duplicate_groups(
-    emb: DataFrame,
-    n_clusters: int = 16,
-    threshold: float = 0.97,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Transitive closure of semantic_dup_pairs: (vec_id, group_id,
-    group_size, is_kept) with keep-first (min id) survivors — the
-    embedding-space member of the duplicate-clustering family, same
-    output contract as graph.duplicate_groups over MinHash pairs."""
-    from data_pipeline_agent_spark.operators.graph import duplicate_groups
-
-    pairs = semantic_dup_pairs(emb, n_clusters, threshold, seed, id_col, vec_col)
-    return duplicate_groups(pairs.select("id_a", "id_b")).withColumnRenamed(
-        "doc_id", id_col
     )
 
 
@@ -1010,36 +927,26 @@ def pq_fit(
     driver at any corpus scale; production PQ always trains codebooks on
     a sample. Returns codebooks[s][c] = centroid (dim/m floats).
 
-    Memoized per (session, input plan, dials) — see _PQ_BOOKS_CACHE."""
+    Memoized per (session, input plan, dials): a production PQ index
+    trains its codebooks once and every probe reuses them."""
     import numpy as np
 
-    key = (
-        emb.sparkSession.sparkContext.applicationId,
-        emb.semanticHash(),
-        "raw",
-        m,
-        k,
-        seed,
-        sample_rows,
-        id_col,
-        vec_col,
-    )
-    books = _PQ_BOOKS_CACHE.get(key)
-    if books is not None:
-        return books
-    rows = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).collect()
-    X = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    dim = X.shape[1]
-    sub = dim // m
-    books = [
-        [
-            [float(x) for x in c]
-            for c in _np_kmeans(X[:, s * sub : (s + 1) * sub], k, seed + s)
-        ]
+    def fit():
+        rows = emb.select(id_col, vec_col).orderBy(id_col).limit(sample_rows).collect()
+        return _fit_books(np.array([list(r[1]) for r in rows], dtype=np.float64), m, k, seed)
+
+    return fit_memo(emb, ("pq", m, k, seed, sample_rows, id_col, vec_col), fit)
+
+
+def _fit_books(X, m: int, kc: int, seed: int) -> list[list[list[float]]]:
+    """Codebooks for the sample ``X`` (rows x dim): ``X`` cut into ``m``
+    equal subspaces, ``kc`` centroids each from a seeded ``_np_kmeans``.
+    books[s][c] is centroid c of subspace s."""
+    sub = X.shape[1] // m
+    return [
+        [[float(x) for x in c] for c in _np_kmeans(X[:, s * sub : (s + 1) * sub], kc, seed + s)]
         for s in range(m)
     ]
-    _PQ_BOOKS_CACHE[key] = books
-    return books
 
 
 def _pq_code_expr(vec_col: str, books: list[list[list[float]]], s: int) -> Column:
@@ -1102,7 +1009,19 @@ def pq_topk(
     zip_with/aggregate fold of element_at lookups, no vector math in the
     scan. Encode + score are
     shuffle-free; only the per-anchor top-k window shuffles (rows
-    already pre-filtered to k per partition by the window's rank)."""
+    already pre-filtered to k per partition by the window's rank).
+
+    Ids must be integral: each anchor's id enters the scoring expression
+    as a BIGINT literal."""
+    from pyspark.sql.types import IntegralType
+
+    id_type = emb.schema[id_col].dataType
+    if not isinstance(id_type, IntegralType):
+        raise TypeError(
+            f"pq_topk: id column {id_col!r} is {id_type.simpleString()}; "
+            "anchor ids enter the scoring expression as BIGINT literals, "
+            "so pq_topk needs an integral id type"
+        )
     books = pq_fit(emb, m, kc, seed, vec_col, id_col=id_col)
     coded = fan_out(emb).select(
         F.col(id_col),
@@ -1138,12 +1057,7 @@ def pq_topk(
         .select(F.col("s.query_id").alias("query_id"), "neighbor_id", F.col("s.pq_dist2").alias("pq_dist2"))
         .where(F.col("neighbor_id") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("pq_dist2"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "pq_dist2", F.col("rk").cast("long").alias("rk"))
-    )
+    return _rank_topk(scored, "pq_dist2", k, descending=False)
 
 
 def _adc_table(q: list[float], books: list[list[list[float]]]) -> list[list[float]]:
@@ -1246,46 +1160,20 @@ def ivfpq_topk(
     assigned, cdf = ivf_assign(emb, n_centroids, seed, id_col, vec_col)
     cents = {int(r["cell"]): [float(x) for x in r["centroid"]] for r in cdf.collect()}
     # residual codebooks on a bounded deterministic sample (pq_fit's
-    # ORDER BY id convention — a bare limit is layout-dependent).
-    # Memoized like the coarse quantizer (r12, _PQ_BOOKS_CACHE): the
-    # residual distribution is a pure function of (input plan, quantizer
-    # dials), both already in the key, so a cached fit is bit-identical
-    # to a refit and the sample collect + m Lloyd fits run once per
-    # session instead of once per query.
+    # ORDER BY id convention — a bare limit is layout-dependent), memoized
+    # like the coarse quantizer: the residual distribution is a pure
+    # function of the input plan and the quantizer dials, all in the key.
     import numpy as np
 
-    bkey = (
-        emb.sparkSession.sparkContext.applicationId,
-        emb.semanticHash(),
-        "residual",
-        n_centroids,
-        m,
-        kc,
-        seed,
-        id_col,
-        vec_col,
-    )
-    books = _PQ_BOOKS_CACHE.get(bkey)
-    if books is None:
-        sample = (
-            assigned.orderBy(id_col).limit(10_000).collect()
-        )
-        # vectorized residuals (r12): same float64 subtraction per element
-        # as the old per-element comprehension (~0.7 s of driver time,
-        # guide §5)
+    def fit_residual_books():
+        sample = assigned.orderBy(id_col).limit(10_000).collect()
         V = np.array([list(r[vec_col]) for r in sample], dtype=np.float64)
         C = np.array([cents[int(r["__cell"])] for r in sample], dtype=np.float64)
-        X = V - C
-        dim = X.shape[1]
-        sub = dim // m
-        books = [
-            [
-                [float(x) for x in c]
-                for c in _np_kmeans(X[:, s * sub : (s + 1) * sub], kc, seed + s)
-            ]
-            for s in range(m)
-        ]
-        _PQ_BOOKS_CACHE[bkey] = books
+        return _fit_books(V - C, m, kc, seed)
+
+    books = fit_memo(
+        emb, ("pq_residual", n_centroids, m, kc, seed, id_col, vec_col), fit_residual_books
+    )
     # centroids attach via a broadcast join of the 16-row centroid frame
     # instead of an element_at over a 16x64-double literal (r12): every
     # DataFrame op downstream re-analyzes the accumulated plan, and each
@@ -1339,11 +1227,12 @@ def ivfpq_topk(
         )
         for _neg, cell in ranked[:nprobe]:
             qres = [q - c for q, c in zip(qv, cents[cell])]
-            probe_rows.append((cell, int(ar[id_col]), _adc_table(qres, books)))
+            probe_rows.append((cell, ar[id_col], _adc_table(qres, books)))
+    id_type = emb.schema[id_col].dataType.simpleString()
     probe_df = local_frame(
         emb.sparkSession,
         probe_rows,
-        "__cell int, query_id bigint, __table array<array<double>>",
+        f"__cell int, query_id {id_type}, __table array<array<double>>",
     )
     scored = (
         coded.join(F.broadcast(probe_df), "__cell")
@@ -1365,24 +1254,10 @@ def ivfpq_topk(
             ).alias("pq_dist2"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("pq_dist2"), F.asc("neighbor_id")
-    )
     if rerank is None:
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                "pq_dist2",
-                F.col("rk").cast("long").alias("rk"),
-            )
-        )
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= rerank)
-        .select("query_id", "neighbor_id")
+        return _rank_topk(scored, "pq_dist2", k, descending=False)
+    shortlist = _rank_topk(scored, "pq_dist2", rerank, descending=False).select(
+        "query_id", "neighbor_id"
     )
     # refine: exact cosine over the shortlist only — true vectors come
     # back via one id equi-join (shortlist is R x |anchors| rows; AQE
@@ -1404,25 +1279,6 @@ def ivfpq_topk(
     rescored = refined.select(
         "query_id",
         "neighbor_id",
-        F.round(
-            cosine_pre(
-                dot(F.col("__qv"), F.col("__ev")),
-                row_norm(F.col("__qv")),
-                F.col("__en"),
-            ),
-            6,
-        ).alias("cos_sim"),
+        _pair_cos(dot("__qv", "__ev"), row_norm(F.col("__qv")), "__en").alias("cos_sim"),
     )
-    wf = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(wf))
-        .where(F.col("rk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cos_sim",
-            F.col("rk").cast("long").alias("rk"),
-        )
-    )
+    return _rank_topk(rescored, "cos_sim", k)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 from data_pipeline_agent_spark.operators import similarity as S
@@ -23,6 +25,65 @@ def _sql_cos(a: str, b: str) -> str:
 def _sql_bucket(v: str) -> str:
     terms = [f"CASE WHEN {v}[{i + 1}] > 0 THEN {1 << i} ELSE 0 END" for i in range(SIGN_BITS)]
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
+
+
+def _exact_topk_oracle(n_anchors: int, k: int, recall: bool) -> str:
+    """DuckDB twin of ``brute_force_topk`` for the anchors ``vec_id <
+    n_anchors``. ``recall`` adds the ``recall_ok`` column of a
+    ``_recall_gated`` query, which must be TRUE."""
+    ok = ",\n               TRUE AS recall_ok" if recall else ""
+    return f"""
+        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
+                   FROM embeddings WHERE vec_id < {n_anchors}),
+        scored AS (
+          SELECT a.query_id, e.vec_id AS neighbor_id,
+                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
+          FROM embeddings e, a WHERE e.vec_id != a.query_id
+        )
+        SELECT query_id, neighbor_id, cos_sim,
+               CAST(row_number() OVER (PARTITION BY query_id
+                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk{ok}
+        FROM scored
+        QUALIFY rk <= {k}
+    """
+
+
+def _recall_gated(
+    spark: SparkSession,
+    sf_dir: str,
+    n_anchors: int,
+    k: int,
+    floor: float,
+    approx: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """The r4 sketch contract for an approximate search whose answer set
+    is engine-specific (cell, codebook or bucket placement): the output
+    rows are the exact brute-force top-k of the anchors ``vec_id <
+    n_anchors`` (hash-comparable with ``_exact_topk_oracle``), plus an
+    in-row ``recall_ok`` asserting that ``approx(emb, anchors)`` recovers
+    at least ``floor`` of those exact (query, neighbor) slots. A recall
+    collapse flips the boolean and the driver's value-hash goes red.
+
+    The exact frame is tiny (anchors x k) but costs a corpus scan, so it
+    is eagerly localCheckpointed: its three consumers (the output rows,
+    the hit semi-join, the total count) compute it once."""
+    from pyspark.sql import functions as F
+
+    emb = table(spark, sf_dir, "embeddings")
+    anchors = emb.where(F.col("vec_id") < n_anchors)
+    exact = S.brute_force_topk(emb, anchors, k=k).localCheckpoint(eager=True)
+    got = approx(emb, anchors)
+    hits = exact.join(
+        got.select(F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")),
+        (exact["query_id"] == F.col("__aq")) & (exact["neighbor_id"] == F.col("__an")),
+        "left_semi",
+    )
+    rec = (
+        hits.agg(F.count(F.lit(1)).alias("__nh"))
+        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
+        .select((F.col("__nh") >= F.lit(floor) * F.col("__nt")).alias("recall_ok"))
+    )
+    return exact.crossJoin(F.broadcast(rec))
 
 
 # The SCALE-DEFAULT graph chain, shared by sim_knn_graph_adaptive,
@@ -69,20 +130,7 @@ _SQL_ADAPTIVE_GRAPH_CTES = """
 
 @register(
     "sim_bruteforce_topk",
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 10),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk
-        FROM scored
-        QUALIFY rk <= 5
-    """,
+    oracle=_exact_topk_oracle(10, 5, False),
     description="exact cosine top-5 per anchor (anchors broadcast, corpus scanned once)",
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,21 +277,7 @@ KNN_GRAPH_RECALL_FLOOR = 0.6
 @register(
     "sim_knn_graph_recall",
     materializes_on_build=True,
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 50),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk,
-               TRUE AS recall_ok
-        FROM scored
-        QUALIFY rk <= 3
-    """,
+    oracle=_exact_topk_oracle(50, 3, True),
     description="kNN graph in its SCALE-DEFAULT mode (adaptive bucket bits, "
     "adaptive sign-plane rotations) under the r4 sketch contract: the "
     "hash-comparable rows are the exact brute-force top-3 for 50 probe "
@@ -269,35 +303,21 @@ def sim_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from data_pipeline_agent_spark.plans.registry import table_num_rows
 
-    emb = table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 50)
-    exact = S.brute_force_topk(emb, probes, k=3).localCheckpoint(eager=True)
-    g = S.knn_graph(
-        emb,
-        k=3,
-        bits=None,
-        rotations=None,
-        n_hint=table_num_rows(sf_dir, "embeddings"),
-        dim_hint=EMB_DIM,
-    ).where(F.col("query_id") < 50)
-    hits = exact.join(
-        g.select(
-            F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")
-        ),
-        (exact["query_id"] == F.col("__aq"))
-        & (exact["neighbor_id"] == F.col("__an")),
-        "left_semi",
+    return _recall_gated(
+        spark,
+        sf_dir,
+        50,
+        3,
+        KNN_GRAPH_RECALL_FLOOR,
+        lambda emb, _anchors: S.knn_graph(
+            emb,
+            k=3,
+            bits=None,
+            rotations=None,
+            n_hint=table_num_rows(sf_dir, "embeddings"),
+            dim_hint=EMB_DIM,
+        ).where(F.col("query_id") < 50),
     )
-    rec = (
-        hits.agg(F.count(F.lit(1)).alias("__nh"))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
-        .select(
-            (F.col("__nh") >= F.lit(KNN_GRAPH_RECALL_FLOOR) * F.col("__nt")).alias(
-                "recall_ok"
-            )
-        )
-    )
-    return exact.crossJoin(F.broadcast(rec))
 
 
 # Aggregate-recall floor for the flip-one-bit MULTI-PROBE mode (r9):
@@ -316,21 +336,7 @@ KNN_MULTIPROBE_ROTATIONS = 4
 @register(
     "sim_knn_graph_multiprobe_recall",
     materializes_on_build=True,
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 50),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk,
-               TRUE AS recall_ok
-        FROM scored
-        QUALIFY rk <= 3
-    """,
+    oracle=_exact_topk_oracle(50, 3, True),
     description="the kNN graph's HIGH-RECALL dial (r9): flip-one-bit "
     "multi-probe — the query side probes its home bucket plus every "
     "1-Hamming neighbor (bits+1 keys per rotation, candidate side "
@@ -350,36 +356,22 @@ def sim_knn_graph_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFra
 
     from data_pipeline_agent_spark.plans.registry import table_num_rows
 
-    emb = table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 50)
-    exact = S.brute_force_topk(emb, probes, k=3).localCheckpoint(eager=True)
-    g = S.knn_graph(
-        emb,
-        k=3,
-        bits=None,
-        rotations=KNN_MULTIPROBE_ROTATIONS,
-        multiprobe=True,
-        n_hint=table_num_rows(sf_dir, "embeddings"),
-        dim_hint=EMB_DIM,
-    ).where(F.col("query_id") < 50)
-    hits = exact.join(
-        g.select(
-            F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")
-        ),
-        (exact["query_id"] == F.col("__aq"))
-        & (exact["neighbor_id"] == F.col("__an")),
-        "left_semi",
+    return _recall_gated(
+        spark,
+        sf_dir,
+        50,
+        3,
+        KNN_MULTIPROBE_RECALL_FLOOR,
+        lambda emb, _anchors: S.knn_graph(
+            emb,
+            k=3,
+            bits=None,
+            rotations=KNN_MULTIPROBE_ROTATIONS,
+            multiprobe=True,
+            n_hint=table_num_rows(sf_dir, "embeddings"),
+            dim_hint=EMB_DIM,
+        ).where(F.col("query_id") < 50),
     )
-    rec = (
-        hits.agg(F.count(F.lit(1)).alias("__nh"))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
-        .select(
-            (
-                F.col("__nh") >= F.lit(KNN_MULTIPROBE_RECALL_FLOOR) * F.col("__nt")
-            ).alias("recall_ok")
-        )
-    )
-    return exact.crossJoin(F.broadcast(rec))
 
 
 # Aggregate-recall floor for the margin-bounded LINEAR multiprobe mode
@@ -397,21 +389,7 @@ KNN_MP_LINEAR_RECALL_FLOOR = 0.75
 @register(
     "sim_knn_graph_multiprobe_linear_recall",
     materializes_on_build=True,
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 50),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk,
-               TRUE AS recall_ok
-        FROM scored
-        QUALIFY rk <= 3
-    """,
+    oracle=_exact_topk_oracle(50, 3, True),
     description="recall gate for the margin-bounded LINEAR multiprobe "
     "mode (r10): exact brute-force top-3 rows for 50 probes plus an "
     "in-row boolean gating aggregate recall at >= 0.75 (measured "
@@ -429,38 +407,23 @@ def sim_knn_graph_multiprobe_linear_recall(
 
     from data_pipeline_agent_spark.plans.registry import table_num_rows
 
-    emb = table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") < 50)
-    exact = S.brute_force_topk(emb, probes, k=3).localCheckpoint(eager=True)
-    g = S.knn_graph(
-        emb,
-        k=3,
-        bits=None,
-        rotations=_MP_LINEAR_ROTATIONS,
-        multiprobe=True,
-        probe_t=_MP_T,
-        n_hint=table_num_rows(sf_dir, "embeddings"),
-        dim_hint=EMB_DIM,
-    ).where(F.col("query_id") < 50)
-    hits = exact.join(
-        g.select(
-            F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")
-        ),
-        (exact["query_id"] == F.col("__aq"))
-        & (exact["neighbor_id"] == F.col("__an")),
-        "left_semi",
+    return _recall_gated(
+        spark,
+        sf_dir,
+        50,
+        3,
+        KNN_MP_LINEAR_RECALL_FLOOR,
+        lambda emb, _anchors: S.knn_graph(
+            emb,
+            k=3,
+            bits=None,
+            rotations=_MP_LINEAR_ROTATIONS,
+            multiprobe=True,
+            probe_t=_MP_T,
+            n_hint=table_num_rows(sf_dir, "embeddings"),
+            dim_hint=EMB_DIM,
+        ).where(F.col("query_id") < 50),
     )
-    rec = (
-        hits.agg(F.count(F.lit(1)).alias("__nh"))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
-        .select(
-            (
-                F.col("__nh")
-                >= F.lit(KNN_MP_LINEAR_RECALL_FLOOR) * F.col("__nt")
-            ).alias("recall_ok")
-        )
-    )
-    return exact.crossJoin(F.broadcast(rec))
 
 
 _MP_BITS = SIGN_BITS  # pinned so the multiprobe twin is a static SQL string
@@ -749,21 +712,7 @@ IVF_RECALL_FLOOR = 0.4
 @register(
     "sim_ivf_topk",
     materializes_on_build=True,
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 10),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk,
-               TRUE AS recall_ok
-        FROM scored
-        QUALIFY rk <= 5
-    """,
+    oracle=_exact_topk_oracle(10, 5, True),
     description="IVF ANN (KMeans cells, nprobe=4 of 16) under the r4 sketch "
     "contract: exact-twin top-5 rows (hash-comparable) plus an in-row "
     "aggregate-recall-floor boolean — IVF recall < 0.4 vs the exact set "
@@ -771,59 +720,23 @@ IVF_RECALL_FLOOR = 0.4
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF in its production (nprobe < cells) mode, oracle-tightened the
-    way the round-4 sketch queries were: the ANN *answer set* is
-    engine-specific (it depends on where KMeans puts the centroids), so
-    the hash-comparable output is the exact brute-force top-5, and the
-    IVF machinery is gated by an in-row boolean asserting its aggregate
-    recall against that exact set clears ``IVF_RECALL_FLOOR``. A recall
-    collapse (broken cell assignment, lost candidates, bad probing)
-    flips the boolean and the driver's value-hash goes red.
-
-    The exact frame is tiny (|anchors| x k) but costs a corpus scan —
-    eagerly localCheckpointed so its three consumers (output rows, the
-    hit semi-join, the total count) compute it once."""
-    from pyspark.sql import functions as F
-
-    emb = table(spark, sf_dir, "embeddings")
-    anchors = emb.where(F.col("vec_id") < 10)
-    exact = S.brute_force_topk(emb, anchors, k=5).localCheckpoint(eager=True)
-    approx = S.ivf_topk(emb, anchors, k=5, n_centroids=16, nprobe=4)
-    hits = exact.join(
-        approx.select(
-            F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")
-        ),
-        (exact["query_id"] == F.col("__aq"))
-        & (exact["neighbor_id"] == F.col("__an")),
-        "left_semi",
+    way the round-4 sketch queries were: the ANN *answer set* depends on
+    where KMeans puts the centroids, so the IVF machinery is gated by
+    ``_recall_gated`` at ``IVF_RECALL_FLOOR``. A recall collapse (broken
+    cell assignment, lost candidates, bad probing) flips the boolean."""
+    return _recall_gated(
+        spark,
+        sf_dir,
+        10,
+        5,
+        IVF_RECALL_FLOOR,
+        lambda emb, anchors: S.ivf_topk(emb, anchors, k=5, n_centroids=16, nprobe=4),
     )
-    rec = (
-        hits.agg(F.count(F.lit(1)).alias("__nh"))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
-        .select(
-            (F.col("__nh") >= F.lit(IVF_RECALL_FLOOR) * F.col("__nt")).alias(
-                "recall_ok"
-            )
-        )
-    )
-    return exact.crossJoin(F.broadcast(rec))
 
 
 @register(
     "sim_ivf_exact_topk",
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 10),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk
-        FROM scored
-        QUALIFY rk <= 5
-    """,
+    oracle=_exact_topk_oracle(10, 5, False),
     description="IVF in exhaustive mode (nprobe == n_centroids): every cell is "
     "probed, so the ANN machinery itself is oracle-checked against the exact "
     "brute-force answer — cell assignment/probing must not lose or duplicate "
@@ -1015,21 +928,7 @@ PQ_RECALL_FLOOR = 0.2
 @register(
     "sim_pq_topk",
     materializes_on_build=True,
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 10),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk,
-               TRUE AS recall_ok
-        FROM scored
-        QUALIFY rk <= 5
-    """,
+    oracle=_exact_topk_oracle(10, 5, True),
     description="product-quantization ANN (8x4-bit codes, ADC literal-table "
     "scoring) under the r4 sketch contract: exact-twin top-5 rows "
     "(hash-comparable) plus an in-row candidate-recall-floor boolean — "
@@ -1047,30 +946,14 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows are the exact brute-force top-5; the PQ machinery is gated by an
     in-row boolean asserting its top-20 candidate set recovers at least
     ``PQ_RECALL_FLOOR`` of those exact slots."""
-    from pyspark.sql import functions as F
-
-    emb = table(spark, sf_dir, "embeddings")
-    anchors = emb.where(F.col("vec_id") < 10)
-    exact = S.brute_force_topk(emb, anchors, k=5).localCheckpoint(eager=True)
-    approx = S.pq_topk(emb, anchors, k=20)
-    hits = exact.join(
-        approx.select(
-            F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")
-        ),
-        (exact["query_id"] == F.col("__aq"))
-        & (exact["neighbor_id"] == F.col("__an")),
-        "left_semi",
+    return _recall_gated(
+        spark,
+        sf_dir,
+        10,
+        5,
+        PQ_RECALL_FLOOR,
+        lambda emb, anchors: S.pq_topk(emb, anchors, k=20),
     )
-    rec = (
-        hits.agg(F.count(F.lit(1)).alias("__nh"))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
-        .select(
-            (F.col("__nh") >= F.lit(PQ_RECALL_FLOOR) * F.col("__nt")).alias(
-                "recall_ok"
-            )
-        )
-    )
-    return exact.crossJoin(F.broadcast(rec))
 
 
 # Aggregate-recall floor for the composed IVF-PQ index with exact
@@ -1094,21 +977,7 @@ IVFPQ_RECALL_FLOOR = 0.6
 @register(
     "sim_ivfpq_topk",
     materializes_on_build=True,
-    oracle=f"""
-        WITH a AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings WHERE vec_id < 10),
-        scored AS (
-          SELECT a.query_id, e.vec_id AS neighbor_id,
-                 round({_sql_cos('a.qv', 'e.embedding')}, 6) AS cos_sim
-          FROM embeddings e, a WHERE e.vec_id != a.query_id
-        )
-        SELECT query_id, neighbor_id, cos_sim,
-               CAST(row_number() OVER (PARTITION BY query_id
-                    ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rk,
-               TRUE AS recall_ok
-        FROM scored
-        QUALIFY rk <= 5
-    """,
+    oracle=_exact_topk_oracle(10, 5, True),
     description="IVF-PQ composed index with exact re-rank (r10; dials "
     "re-swept r11) — the production FAISS IndexIVFPQ + refine shape "
     "(Jegou et al. 2011): coarse cells prune to nprobe=8 of 16, "
@@ -1125,32 +994,16 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index's answer set depends on where KMeans puts cells and codebooks,
     so the hash-comparable rows are the exact top-5 and the machinery is
     gated by the aggregate-recall boolean."""
-    from pyspark.sql import functions as F
-
-    emb = table(spark, sf_dir, "embeddings")
-    anchors = emb.where(F.col("vec_id") < 10)
-    exact = S.brute_force_topk(emb, anchors, k=5).localCheckpoint(eager=True)
-    approx = S.ivfpq_topk(
-        emb, anchors, k=5, n_centroids=16, nprobe=8, m=16, rerank=50
-    )
-    hits = exact.join(
-        approx.select(
-            F.col("query_id").alias("__aq"), F.col("neighbor_id").alias("__an")
+    return _recall_gated(
+        spark,
+        sf_dir,
+        10,
+        5,
+        IVFPQ_RECALL_FLOOR,
+        lambda emb, anchors: S.ivfpq_topk(
+            emb, anchors, k=5, n_centroids=16, nprobe=8, m=16, rerank=50
         ),
-        (exact["query_id"] == F.col("__aq"))
-        & (exact["neighbor_id"] == F.col("__an")),
-        "left_semi",
     )
-    rec = (
-        hits.agg(F.count(F.lit(1)).alias("__nh"))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("__nt")))
-        .select(
-            (F.col("__nh") >= F.lit(IVFPQ_RECALL_FLOOR) * F.col("__nt")).alias(
-                "recall_ok"
-            )
-        )
-    )
-    return exact.crossJoin(F.broadcast(rec))
 
 
 def _pagerank_oracle(iters: int) -> str:

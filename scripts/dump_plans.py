@@ -3,11 +3,22 @@
 Dev/judging artifact — shows the actual Catalyst output (pushed filters,
 read schemas, exchange keys, codegen spans) behind the plan-shape claims
 in docstrings and tests/test_plans.py. Not part of the driver contract.
+
+    python scripts/dump_plans.py [--sf-dir DIR]
+    python scripts/dump_plans.py --fingerprint [--sf-dir DIR] [name ...]
+
+``--fingerprint`` writes no file: it prints one line per registry query
+(all of them when no name is given), a hash of the query's optimized
+logical plan with the ids that differ between sessions masked. Equal
+hashes on two checkouts mean a change left that plan as it was.
 """
 
 from __future__ import annotations
 
+import argparse
+import hashlib
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -36,7 +47,8 @@ SHOWCASE = {
     "asof_last_order_before_event": "as-of join as union + one "
     "(key-partitioned) window; tiebreak fused into the same sort order",
     "sim_quantized_topk": "anchor broadcast joins the int8-quantized "
-    "corpus; per-pair math is codegen'd JVM expressions",
+    "corpus; the per-pair zip_with/aggregate fold is interpreted "
+    "(CodegenFallback), not code-generated",
     "incremental_daily_rollup": "partial-aggregate merge: two filtered "
     "scans re-aggregated, no history rescan in the maintained path",
     "doc_chunks_fixed_stride": "chunking entirely map-side: no Exchange "
@@ -117,9 +129,48 @@ SHOWCASE = {
 }
 
 
+# Session-specific parts of a plan's text: expression ids (``#12``), RDD
+# ids (``MapPartitionsRDD[12]``), the physical plan ids a cached
+# relation prints (``plan_id=12``) and the sequence number of the view
+# ``session.reroot`` routes a frame through.
+_VOLATILE = (
+    (re.compile(r"#\d+"), ""),
+    (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
+    (re.compile(r"plan_id=\d+"), "plan_id=_"),
+    (re.compile(r"__graft_reroot_\d+"), "__graft_reroot_N"),
+)
+
+
+def normalized_plan(df) -> str:
+    """The optimized logical plan's text with ``_VOLATILE`` masked."""
+    txt = df._jdf.queryExecution().optimizedPlan().toString()
+    for pat, rep in _VOLATILE:
+        txt = pat.sub(rep, txt)
+    return txt
+
+
+def fingerprints(spark, sf_dir: str, names: list[str]) -> None:
+    for name in names or sorted(REGISTRY):
+        txt = normalized_plan(REGISTRY[name].spark(spark, sf_dir))
+        print(hashlib.sha256(txt.encode()).hexdigest()[:16], name, flush=True)
+        spark.catalog.clearCache()
+
+
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--fingerprint", action="store_true")
+    ap.add_argument(
+        "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
+    args = ap.parse_args()
+    sf_dir = args.sf_dir
     spark = get_spark("plans")
+    if args.fingerprint:
+        spark.sparkContext.setLogLevel("ERROR")
+        fingerprints(spark, sf_dir, args.names)
+        spark.stop()
+        return
     jvm = spark._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     out = [

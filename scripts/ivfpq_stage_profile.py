@@ -77,15 +77,7 @@ def main() -> None:
             ],
             dtype=np.float64,
         )
-        dim = X.shape[1]
-        sub = dim // m
-        books = [
-            [
-                [float(x) for x in c]
-                for c in S._np_kmeans(X[:, s * sub : (s + 1) * sub], kc, seed + s)
-            ]
-            for s in range(m)
-        ]
+        books = S._fit_books(X, m, kc, seed)
 
     from data_pipeline_agent_spark.session import fan_out
 

@@ -10,6 +10,12 @@ not just the sampled 50.
 
 Usage: python scripts/oracle_full.py [--sf-dir /root/testdata/sf0.01]
                                      [--out ORACLE_FULL_r08.json]
+                                     [name ...]
+
+With query names, only those run, each mismatch prints its first differing
+row, and no artifact is written: the fast inner loop for iterating on a
+few queries. ``canon``/``frame_sig`` are the one compare rule, imported by
+tests/test_entry_oracle.py.
 """
 
 from __future__ import annotations
@@ -28,8 +34,8 @@ from data_pipeline_agent_spark.plans import REGISTRY  # noqa: E402
 from data_pipeline_agent_spark.session import TABLES, get_spark  # noqa: E402
 
 
-def _canon(val) -> str:
-    """Cell canonicalization — same rules as the driver/test compare."""
+def canon(val) -> str:
+    """Cell canonicalization — the driver's compare rule."""
     if val is None:
         return "∅"
     if isinstance(val, float):
@@ -41,16 +47,18 @@ def _canon(val) -> str:
     return str(val)
 
 
-def _sig(pdf):
+def frame_sig(pdf):
+    """(sorted column names, sorted canonical rows) of a pandas frame."""
     cols = sorted(pdf.columns)
     rows = sorted(
-        tuple(_canon(v) for v in row) for row in pdf[cols].itertuples(index=False)
+        tuple(canon(v) for v in row) for row in pdf[cols].itertuples(index=False)
     )
     return cols, rows
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default="ORACLE_FULL_r08.json")
     args = ap.parse_args()
@@ -64,7 +72,7 @@ def main() -> None:
         )
 
     out: dict[str, dict] = {}
-    for name in sorted(REGISTRY):
+    for name in args.names or sorted(REGISTRY):
         spec = REGISTRY[name]
         rec: dict = {
             "rows_match": False,
@@ -92,11 +100,15 @@ def main() -> None:
             else:
                 odf = con.execute(spec.oracle).df()
                 rec["oracle_rows"] = len(odf)
-                s_cols, s_rows = _sig(sdf)
-                o_cols, o_rows = _sig(odf)
+                s_cols, s_rows = frame_sig(sdf)
+                o_cols, o_rows = frame_sig(odf)
                 rec["schema_match"] = s_cols == o_cols
                 rec["rows_match"] = len(s_rows) == len(o_rows)
                 rec["hash_match"] = s_rows == o_rows
+                if args.names and not rec["hash_match"]:
+                    print(f"  columns spark {s_cols} oracle {o_cols}")
+                    diff = next(((a, b) for a, b in zip(s_rows, o_rows) if a != b), None)
+                    print(f"  first differing row (spark, oracle): {diff}")
         except Exception as exc:  # record, never abort the sweep
             rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
         if "status" not in rec:
@@ -107,9 +119,10 @@ def main() -> None:
         flag = {"ok": "OK", "unverified": "UNVERIFIED"}.get(rec["status"], "FAIL")
         print(f"{flag} {name} spark={rec['spark_rows']} oracle={rec['oracle_rows']}")
 
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    with open(os.path.join(repo, args.out), "w") as f:
-        json.dump(out, f, indent=1)
+    if not args.names:
+        repo = os.path.join(os.path.dirname(__file__), "..")
+        with open(os.path.join(repo, args.out), "w") as f:
+            json.dump(out, f, indent=1)
     n_oracle = sum(1 for r in out.values() if r["oracle"])
     n_green = sum(1 for r in out.values() if r["status"] == "ok")
     n_unverified = sum(1 for r in out.values() if r["status"] == "unverified")

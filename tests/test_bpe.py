@@ -8,15 +8,17 @@ indirectly (overlapping runs, multi-char cascades, tie-breaks).
 from pyspark.sql import functions as F
 
 from data_pipeline_agent_spark.operators.bpe import (
-    _apply_merge,
+    _apply_merges,
     bpe_train,
     word_freq,
 )
 
 
 def _merge_one(spark, syms: list[str], lhs: str, rhs: str) -> list[str]:
+    """Greedy left-to-right merge of adjacent (lhs, rhs) in a symbol list:
+    the single-rule case of _apply_merges."""
     df = spark.createDataFrame([(syms,)], "syms array<string>")
-    return df.select(_apply_merge(F.col("syms"), lhs, rhs).alias("m")).first()["m"]
+    return df.select(_apply_merges(F.col("syms"), [(lhs, rhs)]).alias("m")).first()["m"]
 
 
 def test_merge_overlapping_run_every_other(spark):
@@ -542,25 +544,23 @@ def test_bpe_pack_registry_nonvacuous(spark):
 
 def test_frozen_tokenizer_cache_identical_to_retrain(spark):
     """r12: the apply-path operators reuse a memoized frozen tokenizer
-    (_FROZEN_CACHE). A cache hit must hand back the SAME rules/vocab a
-    live retrain produces, and the applied output (fertility rows) must
+    (``session.fit_memo``). A memo hit must hand back the SAME rules/vocab
+    a live retrain produces, and the applied output (fertility rows) must
     be identical either way."""
-    from data_pipeline_agent_spark.operators.bpe import (
-        _FROZEN_CACHE,
-        bpe_fertility,
-    )
+    from data_pipeline_agent_spark.operators.bpe import bpe_fertility
+    from data_pipeline_agent_spark.session import _FIT_MEMO
 
     docs = spark.createDataFrame(
         [(1, "ab ab abc"), (2, "abc abc xy"), (3, "ab xy xy")],
         "doc_id long, text string",
     )
-    _FROZEN_CACHE.clear()
+    _FIT_MEMO.clear()
     cold = sorted(map(tuple, bpe_fertility(docs, n_merges=3).collect()))
-    assert len(_FROZEN_CACHE) == 1
+    assert len(_FIT_MEMO) == 1
     warm = sorted(map(tuple, bpe_fertility(docs, n_merges=3).collect()))
-    assert len(_FROZEN_CACHE) == 1  # second call hit the cache
+    assert len(_FIT_MEMO) == 1  # second call hit the memo
     assert warm == cold
-    _FROZEN_CACHE.clear()
+    _FIT_MEMO.clear()
     refit = sorted(map(tuple, bpe_fertility(docs, n_merges=3).collect()))
     assert refit == cold  # memoization changes nothing
-    _FROZEN_CACHE.clear()
+    _FIT_MEMO.clear()

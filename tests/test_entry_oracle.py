@@ -9,13 +9,12 @@ to rehearse the exact driver scale.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 
 from data_pipeline_agent_spark.plans import REGISTRY
 from data_pipeline_agent_spark.session import TABLES
+from scripts.oracle_full import frame_sig
 from tests.conftest import SF_DIR
 
 
@@ -27,25 +26,6 @@ def duck():
     return con
 
 
-def _canon(val):
-    """Canonicalize a cell for comparison (floats -> rounded repr)."""
-    if val is None:
-        return "∅"
-    if isinstance(val, float):
-        if math.isnan(val):
-            return "nan"
-        return f"{val:.6f}"
-    if isinstance(val, bool):
-        return str(bool(val))
-    return str(val)
-
-
-def _frame_sig(pdf):
-    cols = sorted(pdf.columns)
-    rows = sorted(tuple(_canon(v) for v in row) for row in pdf[cols].itertuples(index=False))
-    return cols, rows
-
-
 ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle)
 
 
@@ -54,8 +34,8 @@ def test_query_matches_oracle(spark, duck, name):
     spec = REGISTRY[name]
     sdf = spec.spark(spark, SF_DIR).toPandas()
     odf = duck.execute(spec.oracle).df()
-    s_cols, s_rows = _frame_sig(sdf)
-    o_cols, o_rows = _frame_sig(odf)
+    s_cols, s_rows = frame_sig(sdf)
+    o_cols, o_rows = frame_sig(odf)
     assert s_cols == o_cols, f"{name}: column mismatch {s_cols} vs {o_cols}"
     assert len(s_rows) == len(o_rows), f"{name}: row count {len(s_rows)} vs {len(o_rows)}"
     if s_rows != o_rows:

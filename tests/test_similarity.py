@@ -3,6 +3,8 @@ probing every cell."""
 
 import os
 
+import pytest
+
 
 def test_ivf_recall_vs_bruteforce(spark):
     from pyspark.sql import functions as F
@@ -53,26 +55,6 @@ def test_semantic_dup_pairs_contained_in_bruteforce(spark):
     assert got_pairs <= bf_pairs
     # within-cluster search at k=16 keeps most of the mass on this corpus
     assert len(got_pairs) / len(bf_pairs) >= 0.3
-
-
-def test_semantic_duplicate_groups_contract(spark):
-    """Group output contract: min-id survivor per cluster, every member
-    mapped to exactly one group, group_size consistent."""
-    from data_pipeline_agent_spark.operators.similarity import (
-        semantic_duplicate_groups,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = semantic_duplicate_groups(emb, n_clusters=16, threshold=0.4).collect()
-    assert rows
-    by_group = {}
-    for r in rows:
-        by_group.setdefault(r["group_id"], []).append(r)
-    for gid, members in by_group.items():
-        ids = [m["vec_id"] for m in members]
-        assert min(ids) == gid
-        assert all(m["group_size"] == len(members) for m in members)
-        assert sum(m["is_kept"] for m in members) == 1
 
 
 def test_quantized_cosine_error_bound(spark):
@@ -138,19 +120,32 @@ def test_pq_candidates_recall_floor(spark):
     )
 
 
-def test_sim_pq_topk_contract_rows(spark):
-    """The r5 contract-oracle conversion: the registry sim_pq_topk output
-    must be the exact brute-force top-5 twin (hash-comparable) with the
-    candidate-recall boolean genuinely TRUE on the test data."""
+# The recall-gated registry queries: (anchors vec_id < n, exact top-k).
+RECALL_GATED = {
+    "sim_ivf_topk": (10, 5),
+    "sim_pq_topk": (10, 5),
+    "sim_ivfpq_topk": (10, 5),
+    "sim_knn_graph_recall": (50, 3),
+    "sim_knn_graph_multiprobe_recall": (50, 3),
+    "sim_knn_graph_multiprobe_linear_recall": (50, 3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(RECALL_GATED))
+def test_recall_gated_contract_rows(spark, name):
+    """The r5 contract-oracle conversion: a recall-gated registry query's
+    output must be the exact brute-force top-k twin (hash-comparable)
+    with the recall boolean genuinely TRUE on the test data."""
     from pyspark.sql import functions as F
 
     from data_pipeline_agent_spark.operators.similarity import brute_force_topk
     from data_pipeline_agent_spark.plans import REGISTRY
     from tests.conftest import SF_DIR
 
-    out = REGISTRY["sim_pq_topk"].spark(spark, SF_DIR).collect()
+    n_anchors, k = RECALL_GATED[name]
+    out = REGISTRY[name].spark(spark, SF_DIR).collect()
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5).collect()
+    exact = brute_force_topk(emb, emb.where(F.col("vec_id") < n_anchors), k=k).collect()
     assert sorted((r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in out) == sorted(
         (r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in exact
     )
@@ -275,23 +270,6 @@ def test_ivfpq_zero_norm_centroid_ranking():
     assert _driver_cosine([1.0, 0.0], [0.0, 2.0]) == 0.0
 
 
-def test_sim_ivfpq_topk_contract_rows(spark):
-    """Registry twin: exact brute-force top-5 rows with recall_ok TRUE."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.similarity import brute_force_topk
-    from data_pipeline_agent_spark.plans import REGISTRY
-    from tests.conftest import SF_DIR
-
-    out = REGISTRY["sim_ivfpq_topk"].spark(spark, SF_DIR).collect()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5).collect()
-    assert sorted((r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in out) == sorted(
-        (r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in exact
-    )
-    assert all(r.recall_ok for r in out)
-
-
 def test_knn_graph_exact_within_bucket_and_adaptive_bits(spark):
     """All-points kNN graph: (a) the within-bucket result is EXACT — for
     any query, its reported neighbors are the true cosine top-k among the
@@ -397,24 +375,6 @@ def test_knn_graph_recall_vs_bruteforce(spark):
     r_auto = recall(None)
     assert r_auto >= KNN_GRAPH_RECALL_FLOOR, (r1, r_auto)
     assert r_auto >= r1, (r1, r_auto)
-
-
-def test_sim_knn_graph_recall_contract_rows(spark):
-    """The registered contract query's hash-comparable rows must be the
-    exact brute-force top-3 twin with the recall boolean genuinely TRUE."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.similarity import brute_force_topk
-    from data_pipeline_agent_spark.plans import REGISTRY
-    from tests.conftest import SF_DIR
-
-    out = REGISTRY["sim_knn_graph_recall"].spark(spark, SF_DIR).collect()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = brute_force_topk(emb, emb.where(F.col("vec_id") < 50), k=3).collect()
-    assert sorted((r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in out) == sorted(
-        (r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in exact
-    )
-    assert all(r.recall_ok for r in out)
 
 
 def test_knn_graph_guard_fails_loud_when_rotations_exceed_dim(spark):
@@ -667,6 +627,35 @@ def test_knn_graph_string_ids_match_integer_ids(spark):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
+def test_pq_search_id_types(spark):
+    """``ivfpq_topk`` takes any id type, as brute_force_topk and knn_graph
+    do: string ids ("v" plus zero padding, so they sort as the integers
+    do) give exactly the integer-id result, with and without re-rank.
+    ``pq_topk`` renders anchor ids as BIGINT literals, so it rejects a
+    non-integral id column up front, naming itself."""
+    from pyspark.sql import functions as F
+
+    from data_pipeline_agent_spark.operators.similarity import ivfpq_topk, pq_topk
+    from tests.conftest import SF_DIR
+
+    def sid(c):
+        return F.concat(F.lit("v"), F.lpad(F.col(c).cast("string"), 12, "0")).alias(c)
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    semb = emb.withColumn("vec_id", sid("vec_id"))
+    anchors = emb.where(F.col("vec_id") < 5)
+    sanchors = semb.where(F.col("vec_id") < "v000000000005")
+    for rerank in (None, 20):
+        dials = dict(k=5, n_centroids=8, nprobe=4, m=8, rerank=rerank)
+        want = ivfpq_topk(emb, anchors, **dials)
+        want = want.select(sid("query_id"), sid("neighbor_id"), *want.columns[2:])
+        got = ivfpq_topk(semb, sanchors, **dials)
+        assert got.schema["query_id"].dataType.simpleString() == "string"
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    with pytest.raises(TypeError, match="pq_topk: id column 'vec_id' is string"):
+        pq_topk(semb, sanchors, k=5)
+
+
 def test_knn_block_kernel_dots_are_the_left_fold(monkeypatch):
     """The kNN kernel on one Arrow group, without Spark: every emitted
     dot equals ``dot``'s left fold bit for bit (a reordered sum, as a BLAS
@@ -767,45 +756,25 @@ def test_knn_graph_multiprobe_beats_plain_and_clears_floor(spark):
     assert r_mp > r_plain, (r_plain, r_mp)
 
 
-def test_sim_knn_graph_multiprobe_recall_contract_rows(spark):
-    """The registered multiprobe contract query's hash rows must be the
-    exact brute-force top-3 twin with the recall boolean genuinely TRUE."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.similarity import brute_force_topk
-    from data_pipeline_agent_spark.plans import REGISTRY
-    from tests.conftest import SF_DIR
-
-    out = REGISTRY["sim_knn_graph_multiprobe_recall"].spark(spark, SF_DIR).collect()
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    exact = brute_force_topk(emb, emb.where(F.col("vec_id") < 50), k=3).collect()
-    assert sorted((r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in out) == sorted(
-        (r.query_id, r.neighbor_id, r.rk, r.cos_sim) for r in exact
-    )
-    assert all(r.recall_ok for r in out)
-
-
 def test_pq_books_memoized_and_identical_to_refit(spark):
-    """r12: pq_fit memoizes codebooks per (session, plan, dials) — the
-    cached fit must be the SAME books a cold refit produces (the sample
-    is ORDER BY id, deterministic), and a repeat call must hit the cache
-    (no new entry, identical object)."""
-    from data_pipeline_agent_spark.operators.similarity import (
-        _PQ_BOOKS_CACHE,
-        pq_fit,
-    )
+    """r12: pq_fit memoizes codebooks per (session, plan, dials) through
+    ``session.fit_memo`` — the cached fit must be the SAME books a cold
+    refit produces (the sample is ORDER BY id, deterministic), and a
+    repeat call must hit the memo (no new entry, identical object)."""
+    from data_pipeline_agent_spark.operators.similarity import pq_fit
+    from data_pipeline_agent_spark.session import _FIT_MEMO
     from tests.conftest import SF_DIR
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    _PQ_BOOKS_CACHE.clear()
+    _FIT_MEMO.clear()
     cold = pq_fit(emb, m=4, k=8, seed=7)
-    assert len(_PQ_BOOKS_CACHE) == 1
+    assert len(_FIT_MEMO) == 1
     warm = pq_fit(emb, m=4, k=8, seed=7)
-    assert warm is cold  # cache hit, zero Spark jobs
-    _PQ_BOOKS_CACHE.clear()
+    assert warm is cold  # memo hit, zero Spark jobs
+    _FIT_MEMO.clear()
     refit = pq_fit(emb, m=4, k=8, seed=7)
     assert refit == cold  # bit-identical books: memoization changes nothing
     # a different dial is a different key, not a stale hit
     other = pq_fit(emb, m=4, k=8, seed=8)
     assert other != cold
-    _PQ_BOOKS_CACHE.clear()
+    _FIT_MEMO.clear()
