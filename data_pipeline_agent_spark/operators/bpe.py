@@ -47,7 +47,7 @@ from pyspark.sql.types import (
 
 from data_pipeline_agent_spark.functions import bind
 from data_pipeline_agent_spark.functions.text_hash import tokens
-from data_pipeline_agent_spark.session import fit_memo, local_frame
+from data_pipeline_agent_spark.session import fit_memo, local_frame, release
 
 # Words entering BPE training: lowercase ASCII alphanumeric only. This is
 # a *scope* choice, not a shortcut: it pins Spark's UTF-16-code-unit
@@ -261,7 +261,7 @@ def _train(
     exact: bool = True,
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
     """Shared training loop: returns (merge rules, final segmented vocab
-    ``(word, freq, syms)``). The caller must unpersist the returned
+    ``(word, freq, syms)``). The caller must ``release`` the returned
     frame when done.
 
     The per-round argmax is a bounded driver collect — ONE row at
@@ -282,7 +282,7 @@ def _train(
     # the pair-count collect over it). localCheckpoint(eager=False) keeps
     # the lineage-truncation semantics but lets the collect that the
     # round must run anyway be the materializing action — one job per
-    # round. A replaced frame is unpersisted only AFTER its successor
+    # round. A replaced frame is released only AFTER its successor
     # has materialized (dropping a lazy checkpoint's parent earlier
     # would strand the un-truncated lineage).
     wf = word_freq(docs, text_col).localCheckpoint(eager=False)
@@ -324,8 +324,7 @@ def _train(
             .limit(window)
             .collect()
         ]
-        for old in stale:  # vocab is materialized now — parents can go
-            old.unpersist()
+        release(*stale)  # vocab is materialized now — parents can go
         stale = []
         if not top:
             break
@@ -370,8 +369,7 @@ def _train(
         # its parent can be dropped and callers receive a checkpointed
         # frame (one bounded job — replaces the old per-round eager jobs)
         vocab.count()
-        for old in stale:
-            old.unpersist()
+        release(*stale)
     if stats is not None:
         stats["rounds"] = rounds  # driver round-trips: the batching win
     # hand the (materialized, vocab-sized) result back to the caller's
@@ -445,7 +443,7 @@ def bpe_train(
     merges, vocab = _train(
         docs, n_merges, text_col, batch=batch, stats=stats, exact=exact
     )
-    vocab.unpersist()
+    release(vocab)
     return local_frame(spark, merges, MERGES_SCHEMA)
 
 
@@ -501,8 +499,7 @@ def bpe_merges_with_approx_contract(
         return float(row["f"]) if row["f"] is not None else 0.0
 
     fs, fa = fert(seq_vocab), fert(apx_vocab)
-    seq_vocab.unpersist()
-    apx_vocab.unpersist()
+    release(seq_vocab, apx_vocab)
     seq_tokens = {t for _rk, _l, _r, t, _c in seq_rules}
     apx_tokens = {t for _rk, _l, _r, t, _c in apx_rules}
     overlap = (

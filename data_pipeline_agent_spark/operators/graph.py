@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_agent_spark.session import local_frame
+from data_pipeline_agent_spark.session import local_frame, release
 
 
 def connected_components(
@@ -106,19 +106,24 @@ def connected_components(
     # duration of the closure. Each repartition IS the stage's shuffle:
     # the downstream join/aggregate sees its clustering requirement
     # already satisfied at ``width`` and adds no second exchange.
-    n_edges = e_in.count()
-    if n_edges <= driver_edges:
-        return _cc_driver(e_in)
-    width = max(1, (2 * n_edges + rows_per_partition - 1) // rows_per_partition)
     try:
-        static_width = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except (TypeError, ValueError):
-        static_width = None  # non-integer conf (e.g. 'auto') -> no cap
-    if static_width is not None:
-        width = min(width, static_width)
-    return _cc_rounds(e_in, max_iter, strict, width)
+        n_edges = e_in.count()
+        if n_edges <= driver_edges:
+            return _cc_driver(e_in)
+        width = max(1, (2 * n_edges + rows_per_partition - 1) // rows_per_partition)
+        try:
+            static_width = int(
+                edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+            )
+        except (TypeError, ValueError):
+            static_width = None  # non-integer conf (e.g. 'auto') -> no cap
+        if static_width is not None:
+            width = min(width, static_width)
+        return _cc_rounds(e_in, max_iter, strict, width)
+    finally:
+        # both paths have materialized what they built from e_in: the
+        # driver path holds its rows, the loop path its final labels
+        release(e_in)
 
 
 def _cc_driver(e_in: DataFrame) -> DataFrame:
@@ -198,47 +203,51 @@ def _cc_rounds(e_in: DataFrame, max_iter: int, strict: bool, width: int) -> Data
 
     prev_sum = _label_sum(labels)
     converged = False
-    for _ in range(max_iter):
-        # labels is a checkpointed RDD each round: re-cluster it on the
-        # join key at the closure width so the propagate join compiles
-        # co-partitioned with e (no session-width exchange on either side)
-        lbl = labels.repartition(width, "node")
-        prop = e.join(lbl, e.u == lbl.node).select(
-            F.col("v").alias("node"), F.col("comp")
-        )
-        new = (
-            labels.unionByName(prop)
-            .repartition(width, "node")  # the min-agg's shuffle, at width
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # pointer jumping (path halving): comp <- label(comp). Every comp
-        # value is itself a node id present in the label table (labels
-        # start as identity and only ever take mins over node ids), so
-        # the lookup join always hits; taking it each round doubles the
-        # shortcut depth and turns O(diameter) convergence into O(log).
-        l2 = new.select(F.col("node").alias("c_node"), F.col("comp").alias("c_comp"))
-        jl = new.repartition(width, "comp")  # lookup-join layout, at width
-        # lazy checkpoint (r12): the round's convergence-test aggregate is
-        # the materializing action, so each round runs ONE job instead of
-        # an eager-checkpoint job followed by the label-sum job — same
-        # lineage truncation, half the driver round-trips (guide §1.2)
-        new = (
-            jl.join(l2, jl.comp == l2.c_node, "left")
-            .select(
-                "node",
-                F.least(F.col("comp"), F.coalesce("c_comp", "comp")).alias("comp"),
+    try:
+        for _ in range(max_iter):
+            # labels is a checkpointed RDD each round: re-cluster it on the
+            # join key at the closure width so the propagate join compiles
+            # co-partitioned with e (no session-width exchange on either side)
+            lbl = labels.repartition(width, "node")
+            prop = e.join(lbl, e.u == lbl.node).select(
+                F.col("v").alias("node"), F.col("comp")
             )
-            .localCheckpoint(eager=False)
-        )
-        new_sum = _label_sum(new)
-        labels = new
-        if new_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = new_sum
-    e.unpersist()
+            new = (
+                labels.unionByName(prop)
+                .repartition(width, "node")  # the min-agg's shuffle, at width
+                .groupBy("node")
+                .agg(F.min("comp").alias("comp"))
+            )
+            # pointer jumping (path halving): comp <- label(comp). Every comp
+            # value is itself a node id present in the label table (labels
+            # start as identity and only ever take mins over node ids), so
+            # the lookup join always hits; taking it each round doubles the
+            # shortcut depth and turns O(diameter) convergence into O(log).
+            l2 = new.select(F.col("node").alias("c_node"), F.col("comp").alias("c_comp"))
+            jl = new.repartition(width, "comp")  # lookup-join layout, at width
+            # lazy checkpoint (r12): the round's convergence-test aggregate is
+            # the materializing action, so each round runs ONE job instead of
+            # an eager-checkpoint job followed by the label-sum job — same
+            # lineage truncation, half the driver round-trips
+            new = (
+                jl.join(l2, jl.comp == l2.c_node, "left")
+                .select(
+                    "node",
+                    F.least(F.col("comp"), F.coalesce("c_comp", "comp")).alias("comp"),
+                )
+                .localCheckpoint(eager=False)
+            )
+            new_sum = _label_sum(new)
+            release(labels)  # new has materialized: its input can go
+            labels = new
+            if new_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = new_sum
+    finally:
+        release(e)
     if strict and not converged:
+        release(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(component diameter exceeds ~2^max_iter, or labels are still "
@@ -331,9 +340,9 @@ def pagerank(
     # computes all ``iters`` rounds — each lazy checkpoint still caches
     # and truncates lineage as the job passes through it — instead of
     # one eager-checkpoint job per round (r12, guide §1.2; measured on
-    # sim_pagerank_centrality: driver jobs down by iters-1, the
-    # replaced-frame unpersists deferred exactly like the BPE trainer's
-    # ``stale`` list). The final EAGER checkpoint matters beyond
+    # sim_pagerank_centrality: driver jobs down by iters-1). The replaced
+    # frames are released only after that final job, like the BPE
+    # trainer's ``stale`` list. The final EAGER checkpoint matters beyond
     # truncation: the caller consumes the rank table from multiple
     # subtrees (degree joins + the mass-contract aggregate), and an
     # unmaterialized plan would recompute every round per consumer.
@@ -364,9 +373,7 @@ def pagerank(
             ranks = nxt
         ranks = ranks.localCheckpoint(eager=True)
     finally:
-        e.unpersist()
-        for old in stale:  # materialized above — parents can go
-            old.unpersist()
+        release(e, *stale)  # materialized above — parents can go
     return ranks.select(
         F.col("__n").alias(node_col), F.col("__r").alias("pr_u")
     )

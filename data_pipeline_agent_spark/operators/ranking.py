@@ -139,6 +139,28 @@ class _OrderStat:
         self.stuck = False
 
 
+# GK sketch accuracy shared by every exact-percentile front-end (round 5,
+# was 10000): the sketch is the dominant CPU of pass 1 and its cost grows
+# with accuracy (measured at sf0.1: 1.46 s at 10^4 vs 1.04 s at 10^3, vs
+# 0.68 s for the same aggregate with no sketch). At 1000 the band is
+# 8n/1000 ranks — the one-probe path still covers every key up to ~8M
+# rows (n <= accuracy * max_collect / 8); larger keys take the
+# histogram-refinement rounds they would have taken anyway at the 100 TB
+# grain. The GK probes read values at p -/+ _GK_MARGIN, which bracket
+# both of p's order statistics within the sketch's rank bound.
+_GK_ACCURACY = 1000
+_GK_MARGIN = 3.0 / _GK_ACCURACY
+
+
+def _clamp(p: float) -> float:
+    return min(1.0, max(0.0, p))
+
+
+def _gk_probs(probs) -> list[float]:
+    """The sorted GK probe probabilities for the percentiles ``probs``."""
+    return sorted({_clamp(q) for p in probs for q in (p - _GK_MARGIN, p + _GK_MARGIN)})
+
+
 def exact_percentiles(
     df: DataFrame,
     key_col: str,
@@ -192,15 +214,6 @@ def exact_percentiles(
     double column per alias.
     """
     spark = df.sparkSession
-    # accuracy 1000 (round 5, was 10000): the GK sketch is the dominant
-    # CPU of pass 1 and its cost grows with accuracy (measured at sf0.1:
-    # 1.46 s at 10^4 vs 1.04 s at 10^3, vs 0.68 s for the same aggregate
-    # with no sketch). At 1000 the band is 8n/1000 ranks — the one-probe
-    # path still covers every key up to ~8M rows (n <= accuracy *
-    # max_collect / 8); larger keys take the histogram-refinement rounds
-    # they would have taken anyway at the 100 TB grain.
-    accuracy = 1000
-    margin = 3.0 / accuracy
     # restrict every pass to the requested keys: the stats aggregate
     # below collects one row per surviving key, so without this filter a
     # high-cardinality key column (10^9 user_ids) would materialize the
@@ -224,7 +237,7 @@ def exact_percentiles(
     # cluster the scan already has >= cores splits, so there is nothing to
     # widen. The passes deliberately re-scan the caller's lineage.
     return _exact_percentiles_passes(
-        spark, base, specs, n_buckets, max_collect, max_iters, accuracy, margin
+        spark, base, specs, n_buckets, max_collect, max_iters
     )
 
 
@@ -265,19 +278,11 @@ def exact_percentiles_cols(
     values back from ``extra_out["row"]`` (the pass-1 Row as a dict).
     """
     spark = df.sparkSession
-    accuracy = 1000  # keep in lockstep with exact_percentiles (see note there)
-    margin = 3.0 / accuracy
-
-    def _clamp(p: float) -> float:
-        return min(1.0, max(0.0, p))
-
     cols = list(col_specs)
     aggs = []
     probs_of: dict[str, list[float]] = {}
     for c in cols:
-        ps = sorted(
-            {_clamp(q) for p, _a in col_specs[c] for q in (p - margin, p + margin)}
-        )
+        ps = _gk_probs(p for p, _a in col_specs[c])
         probs_of[c] = ps
         cd = F.col(c).cast("double")
         aggs += [
@@ -285,7 +290,7 @@ def exact_percentiles_cols(
             F.min(cd).alias(f"__mn_{c}"),
             F.max(cd).alias(f"__mx_{c}"),
             F.percentile_approx(
-                cd, F.array(*[F.lit(p) for p in ps]), F.lit(accuracy)
+                cd, F.array(*[F.lit(p) for p in ps]), F.lit(_GK_ACCURACY)
             ).alias(f"__gk_{c}"),
         ]
     if extra_aggs:
@@ -310,7 +315,7 @@ def exact_percentiles_cols(
     )
     specs = [(c, p, a) for c in cols for (p, a) in col_specs[c]]
     return _exact_percentiles_passes(
-        spark, base, specs, n_buckets, max_collect, max_iters, accuracy, margin,
+        spark, base, specs, n_buckets, max_collect, max_iters,
         info=info, unmelted=df,
     )
 
@@ -322,17 +327,10 @@ def _exact_percentiles_passes(
     n_buckets: int,
     max_collect: int,
     max_iters: int,
-    accuracy: int,
-    margin: float,
     info: dict | None = None,
     unmelted: DataFrame | None = None,
 ) -> DataFrame:
     kc, vc = F.col("__k"), F.col("__v")
-
-    # GK probe probs: for each requested percentile, values at p -/+ margin
-    # bracket both of its order statistics within the sketch's rank bound
-    def _clamp(p: float) -> float:
-        return min(1.0, max(0.0, p))
 
     # NULL-key support (r13): a NULL group key cannot be addressed by an
     # equality probe (kc == lit(None) is never true) — callers that fuse
@@ -346,9 +344,7 @@ def _exact_percentiles_passes(
     # pass groups the melted frame. Either way info maps
     # key -> (n, mn, mx, {prob: gk value}).
     if info is None:
-        all_probs = sorted(
-            {q for _k, p, _a in specs for q in (_clamp(p - margin), _clamp(p + margin))}
-        )
+        all_probs = _gk_probs(p for _k, p, _a in specs)
         stats0 = (
             base.groupBy("__k")
             .agg(
@@ -356,7 +352,7 @@ def _exact_percentiles_passes(
                 F.min("__v").alias("mn"),
                 F.max("__v").alias("mx"),
                 F.percentile_approx(
-                    "__v", F.array(*[F.lit(p) for p in all_probs]), F.lit(accuracy)
+                    "__v", F.array(*[F.lit(p) for p in all_probs]), F.lit(_GK_ACCURACY)
                 ).alias("gk"),
             )
             .collect()
@@ -394,11 +390,11 @@ def _exact_percentiles_passes(
         if t.value is not None:
             continue
         n, _mn, _mx, gk = info[t.key]
-        if n <= max_collect or 8 * n // accuracy + 2 > max_collect:
+        if n <= max_collect or 8 * n // _GK_ACCURACY + 2 > max_collect:
             continue  # tiny keys go straight to the final exact agg;
             # huge keys to histogram refinement — both bounded
-        a = gk[_clamp(t.prob - margin)]
-        b = gk[_clamp(t.prob + margin)]
+        a = gk[_clamp(t.prob - _GK_MARGIN)]
+        b = gk[_clamp(t.prob + _GK_MARGIN)]
         t.lo, t.hi = float(a), float(b)
         banded[t.key].append(t)
     if banded and unmelted is not None:
@@ -743,7 +739,6 @@ def grouped_exact_percentiles(
     value_col: str,
     probs: list[float],
     aliases: list[str],
-    keys: list | None = None,
     max_keys: int = 65536,
     keys_per_pass: int = 256,
     n_buckets: int = 4096,
@@ -758,14 +753,13 @@ def grouped_exact_percentiles(
     registry's grouped-percentile queries use (a grouped ``F.percentile``
     would buffer n/k values per reducer).
 
-    ``keys`` defaults to the distinct non-NULL keys of ``df`` (one
-    aggregate, collect bounded by ``max_keys`` — a mistakenly-scaling key
-    domain raises instead of OOMing the driver, same guard discipline as
-    ``grouped_ordered_prefix``; pass the list when the caller already
-    holds it). Returns one row per key: ``key_col`` plus one nullable
-    double column per alias; a key with no non-NULL values yields NULLs,
-    matching what the grouped exact aggregate would return (NULL keys are
-    excluded — ``exact_percentiles``' probes are equality comparisons).
+    The keys are the distinct non-NULL keys of ``df`` (one aggregate,
+    collect bounded by ``max_keys`` — a mistakenly-scaling key domain
+    raises instead of OOMing the driver, same guard discipline as
+    ``grouped_ordered_prefix``). Returns one row per key: ``key_col``
+    plus one nullable double column per alias; a key with no non-NULL
+    values yields NULLs, matching what the grouped exact aggregate would
+    return (NULL keys are excluded unless ``include_null_key``).
 
     ``keys_per_pass`` (round 5): ``exact_percentiles`` compiles
     O(keys x probs) nested ``F.when`` chains and an ``isin`` over every
@@ -779,9 +773,8 @@ def grouped_exact_percentiles(
     per chunk. Bounded key domains (the intended use) fit in one pass.
 
     ``include_null_key`` / ``extra_aggs`` / ``extra_schema`` (r13, guide
-    §1.2 — the source_token_stats NULL-key fusion): only valid on the
-    fused ``keys=None`` path. ``include_null_key=True`` keeps the NULL
-    group in pass 1 (SQL GROUP BY semantics) and resolves its
+    §1.2 — the source_token_stats NULL-key fusion):
+    ``include_null_key=True`` keeps the NULL group in pass 1 (SQL GROUP BY semantics) and resolves its
     percentiles through IS NULL probe predicates instead of the equality
     probes a non-NULL key uses — no separate NULL-slice pass.
     ``extra_aggs`` piggybacks caller aggregates (counts, sums) onto the
@@ -794,82 +787,60 @@ def grouped_exact_percentiles(
             f"grouped_exact_percentiles: {len(probs)} probs vs "
             f"{len(aliases)} aliases — one alias per prob required"
         )
-    if keys is not None and (include_null_key or extra_aggs):
-        raise ValueError(
-            "grouped_exact_percentiles: include_null_key/extra_aggs fuse "
-            "into the keys=None pass-1 aggregate — pass keys=None"
-        )
     if bool(extra_aggs) != bool(extra_schema):
         raise ValueError(
             "grouped_exact_percentiles: extra_aggs and extra_schema must "
             "be passed together (one schema column per extra aggregate)"
         )
     spark = df.sparkSession
-    # lockstep with exact_percentiles (see the accuracy note there)
-    accuracy = 1000
-    margin = 3.0 / accuracy
-
-    def _clamp(p: float) -> float:
-        return min(1.0, max(0.0, p))
-
-    info: dict | None = None
-    if keys is None:
-        # fused key-discovery + pass 1 (r12, guide §1.2 "remove passes"):
-        # the bounded-domain contract means ONE grouped aggregate can
-        # return the key list AND each key's (count, min, max, GK band)
-        # — the separate distinct scan is gone and the per-chunk
-        # exact_percentiles call below skips its own pass 1. The limit
-        # caps the DRIVER collect exactly like the old distinct guard
-        # (the aggregate itself is map-side-partial bounded work at any
-        # key cardinality). Only the keys=None path fuses: an explicit
-        # ``keys`` list may be a small subset of a SCALING domain, where
-        # the isin-filtered per-chunk pass 1 is the bounded plan.
-        all_probs = sorted(
-            {_clamp(q) for p in probs for q in (p - margin, p + margin)}
+    # key discovery fused with pass 1 (r12, "remove passes"):
+    # the bounded-domain contract means ONE grouped aggregate can return
+    # the key list AND each key's (count, min, max, GK band). The limit
+    # caps the DRIVER collect (the aggregate itself is map-side-partial
+    # bounded work at any key cardinality).
+    all_probs = _gk_probs(probs)
+    vd = F.col(value_col).cast("double")
+    grouped = (
+        df if include_null_key else df.where(F.col(key_col).isNotNull())
+    ).groupBy(F.col(key_col).alias("__k"))
+    rows = (
+        grouped.agg(
+            F.count(vd).alias("n"),
+            F.min(vd).alias("mn"),
+            F.max(vd).alias("mx"),
+            F.percentile_approx(
+                vd, F.array(*[F.lit(p) for p in all_probs]), F.lit(_GK_ACCURACY)
+            ).alias("gk"),
+            *(extra_aggs or []),
         )
-        vd = F.col(value_col).cast("double")
-        grouped = (
-            df if include_null_key else df.where(F.col(key_col).isNotNull())
-        ).groupBy(F.col(key_col).alias("__k"))
-        rows = (
-            grouped.agg(
-                F.count(vd).alias("n"),
-                F.min(vd).alias("mn"),
-                F.max(vd).alias("mx"),
-                F.percentile_approx(
-                    vd, F.array(*[F.lit(p) for p in all_probs]), F.lit(accuracy)
-                ).alias("gk"),
-                *(extra_aggs or []),
-            )
-            .limit(max_keys + 1)
-            .collect()
+        .limit(max_keys + 1)
+        .collect()
+    )
+    if len(rows) > max_keys:
+        raise ValueError(
+            f"grouped_exact_percentiles: > {max_keys} distinct keys; "
+            "a scaling key domain cannot be spec-listed — use "
+            "percentile_approx or exact_percentiles per key shard"
         )
-        if len(rows) > max_keys:
-            raise ValueError(
-                f"grouped_exact_percentiles: > {max_keys} distinct keys; "
-                "a scaling key domain cannot be spec-listed — use "
-                "percentile_approx or exact_percentiles per key shard"
-            )
-        keys = [r["__k"] for r in rows]
-        # keys with zero non-NULL values stay in ``keys`` (their output
-        # row is NULLs, as before) but get no info entry — matching what
-        # the value-filtered melted pass 1 would have produced
-        info = {
-            r["__k"]: (
-                int(r["n"]),
-                float(r["mn"]),
-                float(r["mx"]),
-                dict(zip(all_probs, r["gk"])),
-            )
-            for r in rows
-            if r["n"] > 0
-        }
-        if extra_aggs:
-            n_extra = len(extra_aggs)
-            extras = {r["__k"]: tuple(r)[-n_extra:] for r in rows}
+    # keys with zero non-NULL values stay in ``keys`` (their output row is
+    # NULLs) but get no info entry — matching what the value-filtered
+    # melted pass 1 would have produced
+    info = {
+        r["__k"]: (
+            int(r["n"]),
+            float(r["mn"]),
+            float(r["mx"]),
+            dict(zip(all_probs, r["gk"])),
+        )
+        for r in rows
+        if r["n"] > 0
+    }
+    if extra_aggs:
+        n_extra = len(extra_aggs)
+        extras = {r["__k"]: tuple(r)[-n_extra:] for r in rows}
     # NULL (if fused in) sorts after the real keys; tuple compare stops at
     # the flag so the key value itself is never compared against None
-    keys = sorted(keys, key=lambda k: (k is None, k))
+    keys = sorted((r["__k"] for r in rows), key=lambda k: (k is None, k))
     key_type = df.schema[key_col].dataType.simpleString()
     schema = f"`{key_col}` {key_type}, " + ", ".join(
         f"`{a}` double" for a in aliases
@@ -886,29 +857,25 @@ def grouped_exact_percentiles(
             for i, k in enumerate(chunk)
             for j, p in enumerate(probs)
         ]
-        if info is not None:
-            # pass 1 already ran fused above — go straight to the probe
-            # passes with the precomputed per-key stats (same base frame
-            # exact_percentiles would build, key-pruned per chunk)
-            nn_keys = [k for k in chunk if k is not None]
-            kpred = F.col("__k").isin(nn_keys) if nn_keys else F.lit(False)
-            if any(k is None for k in chunk):
-                kpred = kpred | F.col("__k").isNull()
-            base = (
-                df.select(
-                    F.col(key_col).alias("__k"),
-                    F.col(value_col).cast("double").alias("__v"),
-                )
-                .where(kpred)
-                .where(F.col("__v").isNotNull())
+        # pass 1 already ran fused above — go straight to the probe passes
+        # with the precomputed per-key stats (same base frame
+        # exact_percentiles would build, key-pruned per chunk)
+        nn_keys = [k for k in chunk if k is not None]
+        kpred = F.col("__k").isin(nn_keys) if nn_keys else F.lit(False)
+        if any(k is None for k in chunk):
+            kpred = kpred | F.col("__k").isNull()
+        base = (
+            df.select(
+                F.col(key_col).alias("__k"),
+                F.col(value_col).cast("double").alias("__v"),
             )
-            row = _exact_percentiles_passes(
-                spark, base, specs, n_buckets, max_collect, max_iters,
-                accuracy, margin,
-                info={k: info[k] for k in chunk if k in info},
-            ).first()
-        else:
-            row = exact_percentiles(df, key_col, value_col, specs).first()
+            .where(kpred)
+            .where(F.col("__v").isNotNull())
+        )
+        row = _exact_percentiles_passes(
+            spark, base, specs, n_buckets, max_collect, max_iters,
+            info={k: info[k] for k in chunk if k in info},
+        ).first()
         for i, k in enumerate(chunk):
             vals = [row[f"v_{i}_{j}"] for j in range(len(probs))]
             # NULL-safe: empty/all-NULL keys produce None, not a float() crash

@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_agent_spark.operators.cleaning import iqr_bounds
-from data_pipeline_agent_spark.operators.ranking import (
-    exact_percentiles,
-    exact_percentiles_cols,
-)
+from data_pipeline_agent_spark.operators.ranking import exact_percentiles_cols
 from data_pipeline_agent_spark.plans.registry import register, table
 
 # --- P1/P2: null-count profile (main.py:72,76) -------------------------------

@@ -3,19 +3,42 @@
 Each query pairs a Spark operator from operators/dedup.py with a DuckDB
 twin generated from the SAME constants/hash arithmetic (plans/sql_text.py),
 so MinHash banding and SimHash fingerprints match bit for bit.
+
+The curation chain (MinHash-LSH pairs -> connected components -> quality
+survivor -> leak-free split) is written once per stage and shared:
+
+- oracle SQL: ``_lsh_cte`` (shingles -> signatures -> bands -> candidate
+  pairs -> shared-gram counts), ``_verified_pairs`` (the Jaccard >= 0.8
+  check, with or without the rounded score), ``_closure_cte`` (the
+  verified pairs closed by a recursive CTE into ``cc``), ``_quality_sql``,
+  ``_split_case``, ``_survivor_oracle`` (with or without the split
+  column) and ``_span_trim_oracle`` (trim every copy, or keep one);
+- Spark builders: ``_near_dup_pairs``, ``_near_dup_clusters`` (pairs plus
+  connected components), ``_split_col`` (the Column twin of
+  ``_split_case``), ``_best_quality`` (the survivor window),
+  ``_anchored_survivors`` (anchor join plus survivor window) and
+  ``_cluster_survivors``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from data_pipeline_agent_spark.functions.text_hash import (
     LSH_BANDS,
     LSH_ROWS,
     MINHASH_K,
+    tokens,
 )
 from data_pipeline_agent_spark.operators import dedup as D
-from data_pipeline_agent_spark.plans.registry import register, table
+from data_pipeline_agent_spark.operators.graph import (
+    connected_components,
+    duplicate_groups,
+)
+from data_pipeline_agent_spark.operators.similarity import semantic_dup_pairs
+from data_pipeline_agent_spark.operators.text import EN_STOPWORDS, quality_score
+from data_pipeline_agent_spark.plans.registry import register, table, table_num_rows
 from data_pipeline_agent_spark.plans.sql_text import (
     sql_h32,
     sql_minhash,
@@ -23,6 +46,14 @@ from data_pipeline_agent_spark.plans.sql_text import (
     sql_simhash32,
     sql_tokens,
 )
+from data_pipeline_agent_spark.session import fan_out
+from data_pipeline_agent_spark.streaming.neardup import (
+    MIN_SIG_AGREE,
+    minhash_neardup_batch,
+)
+
+# verified near-duplicate: exact word-3gram Jaccard at or above this
+_NEAR_DUP_JACCARD = 0.8
 
 _SHINGLES_CTE = f"""
 toks AS (SELECT doc_id AS id, {sql_tokens('text')} AS t FROM documents),
@@ -32,6 +63,147 @@ sh AS (
 ),
 ex AS (SELECT id, unnest(grams) AS g FROM sh)
 """
+
+
+def _minhash_cte() -> str:
+    cols = ", ".join(f"{sql_minhash('grams', j)} AS mh_{j}" for j in range(MINHASH_K))
+    return f"sig AS (SELECT id, {cols} FROM sh)"
+
+
+def _bands_sql() -> str:
+    selects = []
+    for b in range(LSH_BANDS):
+        key = " || '_' || ".join(
+            f"CAST(mh_{b * LSH_ROWS + r} AS VARCHAR)" for r in range(LSH_ROWS)
+        )
+        selects.append(f"SELECT id, {b} AS band, {key} AS key FROM sig")
+    return " UNION ALL ".join(selects)
+
+
+def _lsh_cte(recursive: bool = False) -> str:
+    """The MinHash-LSH candidate stage as a ``WITH`` chain, mirroring
+    operators/dedup.py::minhash_near_dup_pairs: shingles (``sh``,
+    ``ex``), signatures, band keys, the candidate pairs that share a band
+    key, and their shared-shingle counts (``inter``). ``recursive`` opens
+    the chain for the oracles that close the pairs transitively."""
+    return f"""
+        WITH {'RECURSIVE ' if recursive else ''}{_SHINGLES_CTE},
+        {_minhash_cte()},
+        bands AS ({_bands_sql()}),
+        cands AS (
+          SELECT DISTINCT a.id AS id_a, b.id AS id_b
+          FROM bands a JOIN bands b
+            ON a.band = b.band AND a.key = b.key AND a.id < b.id
+        ),
+        inter AS (
+          SELECT c.id_a, c.id_b, count(*) AS inter
+          FROM cands c JOIN ex ea ON ea.id = c.id_a
+                       JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
+          GROUP BY 1, 2
+        )"""
+
+
+def _verified_pairs(jaccard: bool) -> str:
+    """The ``_lsh_cte`` candidates whose unrounded Jaccard reaches
+    ``_NEAR_DUP_JACCARD`` (the ratio the Spark filter thresholds), with
+    the 4-dp ``jaccard`` when asked for."""
+    score = ", round(i.inter / (sa.sz + sb.sz - i.inter), 4) AS jaccard"
+    return f"""
+          SELECT i.id_a, i.id_b{score if jaccard else ''}
+          FROM inter i JOIN sh sa ON i.id_a = sa.id
+                       JOIN sh sb ON i.id_b = sb.id
+          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= {_NEAR_DUP_JACCARD}"""
+
+
+def _closure_cte() -> str:
+    """``_lsh_cte`` plus the verified pairs closed transitively by a
+    recursive CTE: ``cc(node, comp)``, comp the min id reachable from
+    node — the labels operators/graph.py::connected_components returns."""
+    return f"""{_lsh_cte(recursive=True)},
+        dups AS ({_verified_pairs(jaccard=False)}),
+        edges AS (
+          SELECT id_a AS u, id_b AS v FROM dups
+          UNION
+          SELECT id_b, id_a FROM dups
+        ),
+        reach(node, r) AS (
+          SELECT u, u FROM edges
+          UNION
+          SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.node
+        ),
+        cc AS (SELECT node, min(r) AS comp FROM reach GROUP BY node)"""
+
+
+def _quality_sql() -> str:
+    """The text_quality_score composite formula (same expression as its
+    oracle-checked query) as a per-doc CTE body."""
+    stop_list = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
+    t = sql_tokens("text")
+    return f"""
+        SELECT doc_id AS qid,
+               round(least(len({t}) / 100.0, 1.0)
+                     * (1.0 - abs(len(list_filter({t},
+                                x -> lower(x) IN ({stop_list})))
+                            / greatest(len({t}), 1) - 0.4)
+                          - length(regexp_replace(text, '[^.!?,;:]', '', 'g'))
+                            / greatest(length(text), 1)), 6) AS qs
+        FROM documents
+    """
+
+
+def _split_case(col: str) -> str:
+    """The deterministic md5 train/val/test split of ``col`` (~7.8% /
+    7.8% / 84.4%); ``_split_col`` is its Spark twin."""
+    bucket = f"substr(md5(CAST({col} AS VARCHAR)), 1, 2)"
+    return f"""CASE
+  WHEN {bucket} < '14' THEN 'test'
+  WHEN {bucket} < '28' THEN 'val'
+  ELSE 'train' END"""
+
+
+def _split_col(col: str) -> Column:
+    """Spark twin of ``_split_case``: the same md5 bucket thresholds."""
+    bucket = F.substring(F.md5(F.col(col).cast("string")), 1, 2)
+    return F.when(bucket < "14", "test").when(bucket < "28", "val").otherwise("train")
+
+
+def _near_dup_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, jaccard): the verified MinHash-LSH pairs every
+    curation query starts from."""
+    return D.minhash_near_dup_pairs(docs, threshold=_NEAR_DUP_JACCARD)
+
+
+def _near_dup_clusters(docs: DataFrame) -> DataFrame:
+    """(node, comp): the verified pairs closed into clusters, comp the
+    cluster's min doc id (``_closure_cte``'s twin)."""
+    return connected_components(_near_dup_pairs(docs))
+
+
+def _best_quality(frame: DataFrame, key: str) -> DataFrame:
+    """``frame`` plus ``rk``, which is 1 for each ``key`` group's survivor:
+    the highest quality_score, ties to the smallest doc_id. The window
+    is keyed on clusters, so its groups are cluster-sized (no hot key)."""
+    w = Window.partitionBy(key).orderBy(F.desc("quality_score"), F.asc("doc_id"))
+    return frame.withColumn("rk", F.row_number().over(w))
+
+
+def _anchored_survivors(docs: DataFrame, cc: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, anchor_id, quality_score, rk) for every
+    document: anchor_id is the min doc id of its cluster in ``cc``
+    (node, comp), or its own id outside every cluster, and rk=1 marks
+    the anchor group's quality survivor. quality_score already emits
+    n_tokens, so one corpus scan yields both; the left join is against
+    the post-closure label table, small at any corpus scale."""
+    q = quality_score(docs).select("doc_id", "n_tokens", "quality_score")
+    assign = q.join(
+        cc.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left"
+    ).select(
+        "doc_id",
+        "n_tokens",
+        F.coalesce("comp", F.col("doc_id")).cast("long").alias("anchor_id"),
+        "quality_score",
+    )
+    return _best_quality(assign, "anchor_id")
 
 
 @register(
@@ -69,45 +241,13 @@ def dedup_ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_topk(table(spark, sf_dir, "documents"), k=20)
 
 
-def _minhash_cte() -> str:
-    cols = ", ".join(f"{sql_minhash('grams', j)} AS mh_{j}" for j in range(MINHASH_K))
-    return f"sig AS (SELECT id, {cols} FROM sh)"
-
-
-def _bands_sql() -> str:
-    selects = []
-    for b in range(LSH_BANDS):
-        key = " || '_' || ".join(
-            f"CAST(mh_{b * LSH_ROWS + r} AS VARCHAR)" for r in range(LSH_ROWS)
-        )
-        selects.append(f"SELECT id, {b} AS band, {key} AS key FROM sig")
-    return " UNION ALL ".join(selects)
-
-
 @register(
     "dedup_minhash_lsh",
-    oracle=f"""
-        WITH {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        )
-        SELECT i.id_a, i.id_b,
-               round(i.inter / (sa.sz + sb.sz - i.inter), 4) AS jaccard
-        FROM inter i JOIN sh sa ON i.id_a = sa.id JOIN sh sb ON i.id_b = sb.id
-        WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-    """,
+    oracle=f"{_lsh_cte()}{_verified_pairs(jaccard=True)}",
     description="MinHash(12)+LSH(3x4) candidates, exact-Jaccard verified >= 0.8",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.minhash_near_dup_pairs(table(spark, sf_dir, "documents"), threshold=0.8)
+    return _near_dup_pairs(table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -155,35 +295,7 @@ def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_groups",
-    oracle=f"""
-        WITH RECURSIVE {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        ),
-        dups AS (
-          SELECT i.id_a, i.id_b
-          FROM inter i JOIN sh sa ON i.id_a = sa.id JOIN sh sb ON i.id_b = sb.id
-          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-        ),
-        edges AS (
-          SELECT id_a AS u, id_b AS v FROM dups
-          UNION
-          SELECT id_b, id_a FROM dups
-        ),
-        reach(node, r) AS (
-          SELECT u, u FROM edges
-          UNION
-          SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.node
-        ),
-        cc AS (SELECT node, min(r) AS comp FROM reach GROUP BY node)
+    oracle=f"""{_closure_cte()}
         SELECT node AS doc_id, comp AS group_id,
                CAST(count(*) OVER (PARTITION BY comp) AS BIGINT) AS group_size,
                node = comp AS is_kept
@@ -194,64 +306,14 @@ def dedup_normalized_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is the same pair SQL closed transitively by a recursive CTE",
 )
 def dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from data_pipeline_agent_spark.operators.graph import duplicate_groups
-
-    pairs = D.minhash_near_dup_pairs(
-        table(spark, sf_dir, "documents"), threshold=0.8
-    ).select("id_a", "id_b")
-    return duplicate_groups(pairs)
+    return duplicate_groups(_near_dup_pairs(table(spark, sf_dir, "documents")))
 
 
-def _quality_sql() -> str:
-    """The text_quality_score composite formula (same expression as its
-    oracle-checked query) as a per-doc CTE body."""
-    from data_pipeline_agent_spark.operators.text import EN_STOPWORDS
-
-    stop_list = ", ".join(f"'{s}'" for s in EN_STOPWORDS)
-    t = sql_tokens("text")
-    return f"""
-        SELECT doc_id AS qid,
-               round(least(len({t}) / 100.0, 1.0)
-                     * (1.0 - abs(len(list_filter({t},
-                                x -> lower(x) IN ({stop_list})))
-                            / greatest(len({t}), 1) - 0.4)
-                          - length(regexp_replace(text, '[^.!?,;:]', '', 'g'))
-                            / greatest(length(text), 1)), 6) AS qs
-        FROM documents
-    """
-
-
-@register(
-    "dedup_survivor_best_quality",
-    oracle=f"""
-        WITH RECURSIVE {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        ),
-        dups AS (
-          SELECT i.id_a, i.id_b
-          FROM inter i JOIN sh sa ON i.id_a = sa.id JOIN sh sb ON i.id_b = sb.id
-          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-        ),
-        edges AS (
-          SELECT id_a AS u, id_b AS v FROM dups
-          UNION
-          SELECT id_b, id_a FROM dups
-        ),
-        reach(node, r) AS (
-          SELECT u, u FROM edges
-          UNION
-          SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.node
-        ),
-        cc AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
+def _survivor_oracle(split: bool) -> str:
+    """Per near-dup cluster, the quality survivor and the member count;
+    with ``split``, also the cluster's anchor-keyed split."""
+    split_col = f"{_split_case('comp')} AS split," if split else ""
+    return f"""{_closure_cte()},
         q AS ({_quality_sql()}),
         ranked AS (
           SELECT cc.comp, cc.node, q.qs,
@@ -261,45 +323,47 @@ def _quality_sql() -> str:
           FROM cc JOIN q ON q.qid = cc.node
         )
         SELECT comp AS group_id,
+               {split_col}
                node AS survivor_doc_id,
                qs AS survivor_quality,
                CAST(gsz AS BIGINT) AS group_size
         FROM ranked WHERE rk = 1
-    """,
-    description="quality-aware dedup survivorship: per duplicate cluster, "
-    "keep the member with the highest quality score (tie: smallest id) — "
-    "the policy real training pipelines use instead of keep-first",
-)
-def dedup_survivor_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Survivorship = argmax(quality) per transitive duplicate cluster.
-    Composition of three already-verified stages (LSH pairs -> connected
-    components -> quality scores) plus one window over the groups-sized
-    frame: the window input is one row per duplicate-cluster member, tiny
-    relative to the corpus, partitioned by group — no global sort."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    """
 
-    from data_pipeline_agent_spark.operators.graph import duplicate_groups
-    from data_pipeline_agent_spark.operators.text import quality_score
 
+def _cluster_survivors(spark: SparkSession, sf_dir: str, split: bool) -> DataFrame:
+    """Spark twin of ``_survivor_oracle``: three oracle-checked stages
+    (LSH pairs -> connected components -> quality scores) plus one
+    window over one row per cluster member, tiny relative to the corpus
+    and partitioned by cluster — no global sort. The split is a function
+    of the cluster id (its min-id anchor), never of the surviving doc,
+    so the kept document lands in the split of every member it replaced."""
     docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_dup_pairs(docs, threshold=0.8).select("id_a", "id_b")
-    groups = duplicate_groups(pairs)
+    groups = duplicate_groups(_near_dup_pairs(docs))
     q = quality_score(docs).select("doc_id", "quality_score")
-    w = Window.partitionBy("group_id").orderBy(
-        F.desc("quality_score"), F.asc("doc_id")
-    )
+    split_col = [_split_col("group_id").alias("split")] if split else []
     return (
-        groups.join(q, "doc_id")
-        .withColumn("rk", F.row_number().over(w))
+        _best_quality(groups.join(q, "doc_id"), "group_id")
         .where(F.col("rk") == 1)
         .select(
             "group_id",
+            *split_col,
             F.col("doc_id").alias("survivor_doc_id"),
             F.col("quality_score").alias("survivor_quality"),
             "group_size",
         )
     )
+
+
+@register(
+    "dedup_survivor_best_quality",
+    oracle=_survivor_oracle(split=False),
+    description="quality-aware dedup survivorship: per duplicate cluster, "
+    "keep the member with the highest quality score (tie: smallest id) — "
+    "the policy real training pipelines use instead of keep-first",
+)
+def dedup_survivor_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _cluster_survivors(spark, sf_dir, split=False)
 
 
 def _occ_cte(n: int) -> str:
@@ -320,6 +384,19 @@ occ AS (
 )"""
 
 
+def _dup_anchors(keep_one: bool) -> str:
+    """(doc_id, pos) of every ``occ`` n-gram occurring at least twice in
+    the corpus (within- or cross-doc); with ``keep_one``, minus the
+    occurrences in the gram's min-doc_id keeper."""
+    keeper = ", min(doc_id) OVER (PARTITION BY gram) AS keeper" if keep_one else ""
+    return f"""
+          SELECT doc_id, pos
+          FROM (SELECT doc_id, pos,
+                       count(*) OVER (PARTITION BY gram) AS cnt{keeper}
+                FROM occ)
+          WHERE cnt >= 2{' AND doc_id <> keeper' if keep_one else ''}"""
+
+
 def _span_cte(n: int) -> str:
     """The span-dedup pipeline as a CTE chain (shared by both span
     queries): positional n-gram anchors -> corpus-duplicated anchors
@@ -328,12 +405,7 @@ def _span_cte(n: int) -> str:
     operators/dedup.py::duplicated_spans step for step on the package
     tokenization convention."""
     return f"""{_occ_cte(n)},
-marked AS (
-  SELECT doc_id, pos
-  FROM (SELECT doc_id, pos,
-               count(*) OVER (PARTITION BY gram) AS cnt
-        FROM occ)
-  WHERE cnt >= 2
+marked AS ({_dup_anchors(keep_one=False)}
 ),
 isl AS (
   SELECT doc_id, pos,
@@ -401,10 +473,6 @@ def dedup_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "derive from span dedup — docs with zero spans kept via left join",
 )
 def dedup_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.functions.text_hash import tokens
-
     docs = table(spark, sf_dir, "documents")
     spans = D.duplicated_spans(docs)
     per_doc = spans.groupBy("doc_id").agg(
@@ -472,16 +540,13 @@ def dedup_span_partners(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.span_partners(table(spark, sf_dir, "documents"))
 
 
-@register(
-    "dedup_span_trim",
-    oracle=f"""
+def _span_trim_oracle(keep_one: bool) -> str:
+    """Each document's text with its ``_dup_anchors`` coverage removed:
+    token coverage comes from a per-doc running max over the anchor
+    positions, the twin of operators/dedup.py::span_trimmed_text."""
+    return f"""
         WITH {_occ_cte(D.SPAN_GRAM_N)},
-        anchors AS (
-          SELECT doc_id, pos
-          FROM (SELECT doc_id, pos,
-                       count(*) OVER (PARTITION BY gram) AS cnt
-                FROM occ)
-          WHERE cnt >= 2
+        anchors AS ({_dup_anchors(keep_one)}
         ),
         tok AS (
           SELECT doc_id, pos, tk[pos] AS tok
@@ -511,7 +576,12 @@ def dedup_span_partners(spark: SparkSession, sf_dir: str) -> DataFrame:
                coalesce(string_agg(CASE WHEN covd THEN NULL ELSE tok END,
                         ' ' ORDER BY pos), '') AS trimmed_text
         FROM k GROUP BY doc_id
-    """,
+    """
+
+
+@register(
+    "dedup_span_trim",
+    oracle=_span_trim_oracle(keep_one=False),
     description="the span-dedup decision APPLIED (r9): each document's "
     "text with every duplicated region removed (token coverage from a "
     "per-doc running max over unioned anchor rows — no range join, no "
@@ -526,45 +596,7 @@ def dedup_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_span_trim_keep_one",
-    oracle=f"""
-        WITH {_occ_cte(D.SPAN_GRAM_N)},
-        anchors AS (
-          SELECT doc_id, pos
-          FROM (SELECT doc_id, pos,
-                       count(*) OVER (PARTITION BY gram) AS cnt,
-                       min(doc_id) OVER (PARTITION BY gram) AS keeper
-                FROM occ)
-          WHERE cnt >= 2 AND doc_id <> keeper
-        ),
-        tok AS (
-          SELECT doc_id, pos, tk[pos] AS tok
-          FROM (SELECT doc_id, tk,
-                       unnest(generate_series(1, len(tk))) AS pos
-                FROM toks)
-        ),
-        fl AS (
-          SELECT t.doc_id, t.pos, t.tok, a.pos AS apos
-          FROM tok t LEFT JOIN anchors a
-            ON a.doc_id = t.doc_id AND a.pos = t.pos
-        ),
-        cov AS (
-          SELECT doc_id, pos, tok,
-                 max(apos) OVER (PARTITION BY doc_id ORDER BY pos
-                                 ROWS UNBOUNDED PRECEDING) AS last_a
-          FROM fl
-        ),
-        k AS (SELECT doc_id, pos, tok,
-                     (last_a IS NOT NULL
-                      AND last_a >= pos - {D.SPAN_GRAM_N - 1}) AS covd
-              FROM cov)
-        SELECT CAST(doc_id AS BIGINT) AS doc_id,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               CAST(sum(CASE WHEN covd THEN 0 ELSE 1 END) AS BIGINT)
-                 AS kept_tokens,
-               coalesce(string_agg(CASE WHEN covd THEN NULL ELSE tok END,
-                        ' ' ORDER BY pos), '') AS trimmed_text
-        FROM k GROUP BY doc_id
-    """,
+    oracle=_span_trim_oracle(keep_one=True),
     description="KEEP-ONE-COPY span dedup (r10, r9 verdict task 2) — the "
     "actual Lee et al. 2022 removal semantics: each duplicated 8-gram's "
     "min-id keeper (the rank-1 exemplar span_partners elects) RETAINS its "
@@ -622,37 +654,11 @@ def dedup_blocks_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dedup_blocks(table(spark, sf_dir, "documents"))
 
 
-_SPLIT_CASE = """CASE
-  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '14' THEN 'test'
-  WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '28' THEN 'val'
-  ELSE 'train' END"""
-
-
 @register(
     "corpus_split_leakage",
-    oracle=f"""
-        WITH {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a
-                       JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        ),
-        prs AS (
-          SELECT i.id_a, i.id_b,
-                 round(i.inter / (sa.sz + sb.sz - i.inter), 4) AS jaccard
-          FROM inter i JOIN sh sa ON i.id_a = sa.id
-                       JOIN sh sb ON i.id_b = sb.id
-          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-        ),
-        spl AS (SELECT doc_id AS id, {_SPLIT_CASE} AS split FROM documents)
+    oracle=f"""{_lsh_cte()},
+        prs AS ({_verified_pairs(jaccard=True)}),
+        spl AS (SELECT doc_id AS id, {_split_case('doc_id')} AS split FROM documents)
         SELECT least(sa.split, sb.split) AS split_lo,
                greatest(sa.split, sb.split) AS split_hi,
                CAST(count(*) AS BIGINT) AS n_pairs,
@@ -678,17 +684,9 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the guard costs nothing beyond the dedup pass a pipeline already
     runs. The split CASE stays a scan-stage expression: no shuffle is
     keyed on the split (bounded domain — the salted-agg hazard)."""
-    from pyspark.sql import functions as F
-
     docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_dup_pairs(docs, threshold=0.8)
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < "14", "test")
-        .when(bucket < "28", "val")
-        .otherwise("train")
-    )
-    spl = docs.select(F.col("doc_id").alias("id"), split.alias("split"))
+    pairs = _near_dup_pairs(docs)
+    spl = docs.select(F.col("doc_id").alias("id"), _split_col("doc_id").alias("split"))
     j = (
         pairs.join(
             spl.select(F.col("id").alias("id_a"), F.col("split").alias("sa")),
@@ -712,45 +710,14 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_split_assign_leakfree",
-    oracle=f"""
-        WITH RECURSIVE {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a
-                       JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        ),
-        dups AS (
-          SELECT i.id_a, i.id_b
-          FROM inter i JOIN sh sa ON i.id_a = sa.id
-                       JOIN sh sb ON i.id_b = sb.id
-          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-        ),
-        edges AS (
-          SELECT id_a AS u, id_b AS v FROM dups
-          UNION
-          SELECT id_b, id_a FROM dups
-        ),
-        reach(node, r) AS (
-          SELECT u, u FROM edges
-          UNION
-          SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.node
-        ),
-        cc AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
+    oracle=f"""{_closure_cte()},
         assign AS (
           SELECT d.doc_id,
                  coalesce(c.comp, d.doc_id) AS anchor_id
           FROM documents d LEFT JOIN cc c ON c.node = d.doc_id
         )
         SELECT doc_id, CAST(anchor_id AS BIGINT) AS anchor_id,
-               {_SPLIT_CASE.replace('doc_id', 'anchor_id')} AS split,
+               {_split_case('anchor_id')} AS split,
                anchor_id <> doc_id AS moved_with_cluster
         FROM assign
     """,
@@ -768,69 +735,25 @@ def corpus_split_assign_leakfree(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_split_leakage's split for them. One left join of the corpus
     against the (tiny) clustered-node table; the split CASE stays a
     scan-stage expression."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.graph import connected_components
-
     docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_dup_pairs(docs, threshold=0.8).select(
-        "id_a", "id_b"
-    )
-    cc = connected_components(pairs, src="id_a", dst="id_b")
+    cc = _near_dup_clusters(docs)
     assign = docs.join(
         cc.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left"
     ).select(
         "doc_id",
         F.coalesce("comp", F.col("doc_id")).cast("long").alias("anchor_id"),
     )
-    bucket = F.substring(F.md5(F.col("anchor_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < "14", "test")
-        .when(bucket < "28", "val")
-        .otherwise("train")
-    )
     return assign.select(
         "doc_id",
         "anchor_id",
-        split.alias("split"),
+        _split_col("anchor_id").alias("split"),
         (F.col("anchor_id") != F.col("doc_id")).alias("moved_with_cluster"),
     )
 
 
 @register(
     "corpus_split_budget",
-    oracle=f"""
-        WITH RECURSIVE {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a
-                       JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        ),
-        dups AS (
-          SELECT i.id_a, i.id_b
-          FROM inter i JOIN sh sa ON i.id_a = sa.id
-                       JOIN sh sb ON i.id_b = sb.id
-          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-        ),
-        edges AS (
-          SELECT id_a AS u, id_b AS v FROM dups
-          UNION
-          SELECT id_b, id_a FROM dups
-        ),
-        reach(node, r) AS (
-          SELECT u, u FROM edges
-          UNION
-          SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.node
-        ),
-        cc AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
+    oracle=f"""{_closure_cte()},
         q AS ({_quality_sql()}),
         assign AS (
           SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS anchor_id,
@@ -843,7 +766,7 @@ def corpus_split_assign_leakfree(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     ORDER BY q.qs DESC, a.doc_id ASC) AS rk
           FROM assign a JOIN q ON q.qid = a.doc_id
         )
-        SELECT {_SPLIT_CASE.replace('doc_id', 'anchor_id')} AS split,
+        SELECT {_split_case('anchor_id')} AS split,
                CAST(count(*) AS BIGINT) AS n_docs,
                CAST(sum(CASE WHEN rk = 1 THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_kept,
@@ -869,42 +792,11 @@ def corpus_split_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate keyed on the bounded split domain. The survivor rule and
     split rule are the verified corpus_split_survivor semantics; this
     rolls them up to the budget numbers."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.graph import connected_components
-    from data_pipeline_agent_spark.operators.text import quality_score
-
     docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_dup_pairs(docs, threshold=0.8).select("id_a", "id_b")
-    cc = connected_components(pairs, src="id_a", dst="id_b")
-    # ONE corpus scan for n_tokens AND quality (r13, guide §1.2) — same
-    # fusion as dual_grain_split_assign: quality_score already emits the
-    # identical n_tokens column, so the separate docs projection and the
-    # doc_id-keyed join back to the quality frame were a second full scan
-    # plus a corpus-grain shuffle join for row-local columns.
-    q = quality_score(docs).select("doc_id", "n_tokens", "quality_score")
-    assign = q.join(
-        cc.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("comp", F.col("doc_id")).cast("long").alias("anchor_id"),
-        "quality_score",
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("quality_score"), F.asc("doc_id")
-    )
-    ranked = assign.withColumn("rk", F.row_number().over(w))
-    bucket = F.substring(F.md5(F.col("anchor_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < "14", "test")
-        .when(bucket < "28", "val")
-        .otherwise("train")
-    )
+    ranked = _anchored_survivors(docs, _near_dup_clusters(docs))
     kept = F.col("rk") == 1
     return (
-        ranked.groupBy(split.alias("split"))
+        ranked.groupBy(_split_col("anchor_id").alias("split"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum(F.when(kept, 1).otherwise(0)).cast("long").alias("n_kept"),
@@ -929,13 +821,6 @@ def dual_grain_split_assign(
     anchor-keyed md5 split. Returns (ranked, lex_pairs, sem_pairs);
     the pair frames are checkpointed (post-threshold grains) because
     they feed both the closure and the cohesion contracts."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.graph import connected_components
-    from data_pipeline_agent_spark.operators.similarity import semantic_dup_pairs
-    from data_pipeline_agent_spark.operators.text import quality_score
-
     # LAZY checkpoints (r12, guide §1.2): connected_components' own
     # width-sizing count() over the union is the materializing action —
     # it computes straight through both lazy checkpoints, caching them
@@ -943,46 +828,16 @@ def dual_grain_split_assign(
     # jobs the old code ran are pure savings (truncation semantics
     # identical; nothing unpersists the pair frames before the contracts
     # consume them).
-    lex = (
-        D.minhash_near_dup_pairs(docs, threshold=0.8)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=False)
-    )
+    lex = _near_dup_pairs(docs).select("id_a", "id_b").localCheckpoint(eager=False)
     sem = (
         semantic_dup_pairs(emb, n_clusters=n_clusters, threshold=0.4)
         .select("id_a", "id_b")
         .localCheckpoint(eager=False)
     )
     cc = connected_components(lex.unionByName(sem), src="id_a", dst="id_b")
-    # ONE corpus scan for n_tokens AND quality (r13, guide §1.2):
-    # quality_score already emits the identical n_tokens column
-    # (F.size(tokens(text)).cast("long")), so the old separate
-    # docs-projection + doc_id-keyed join back to the quality frame was a
-    # second full scan of documents plus a corpus-grain shuffle join for
-    # columns one row-local projection produces together. The cc join is
-    # unchanged (label table is post-closure small — broadcasts at any
-    # corpus scale).
-    q = quality_score(docs).select("doc_id", "n_tokens", "quality_score")
-    assign = q.join(
-        cc.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        "n_tokens",
-        F.coalesce("comp", F.col("doc_id")).cast("long").alias("anchor_id"),
-        "quality_score",
-    )
-    bucket = F.substring(F.md5(F.col("anchor_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < "14", "test")
-        .when(bucket < "28", "val")
-        .otherwise("train")
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("quality_score"), F.asc("doc_id")
-    )
     ranked = (
-        assign.withColumn("rk", F.row_number().over(w))
-        .withColumn("split", split)
+        _anchored_survivors(docs, cc)
+        .withColumn("split", _split_col("anchor_id"))
         # corpus-grain checkpoint: the frame feeds five contract
         # consumers (same convention as source_token_stats)
         .localCheckpoint(eager=True)
@@ -1032,11 +887,6 @@ def corpus_split_budget_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     on cluster anchors; every contract boolean is an aggregate or one
     anti-join on post-closure (tiny) grains. The budget frame itself is
     3 rows."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.functions.text_hash import tokens
-    from data_pipeline_agent_spark.plans.registry import table_num_rows
-
     docs = table(spark, sf_dir, "documents")
     emb = table(spark, sf_dir, "embeddings")
     n_clusters = max(16, table_num_rows(sf_dir, "embeddings") // 750)
@@ -1151,53 +1001,7 @@ def corpus_split_budget_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_split_survivor",
-    oracle=f"""
-        WITH RECURSIVE {_SHINGLES_CTE},
-        {_minhash_cte()},
-        bands AS ({_bands_sql()}),
-        cands AS (
-          SELECT DISTINCT a.id AS id_a, b.id AS id_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.key = b.key AND a.id < b.id
-        ),
-        inter AS (
-          SELECT c.id_a, c.id_b, count(*) AS inter
-          FROM cands c JOIN ex ea ON ea.id = c.id_a
-                       JOIN ex eb ON eb.id = c.id_b AND eb.g = ea.g
-          GROUP BY 1, 2
-        ),
-        dups AS (
-          SELECT i.id_a, i.id_b
-          FROM inter i JOIN sh sa ON i.id_a = sa.id
-                       JOIN sh sb ON i.id_b = sb.id
-          WHERE i.inter / (sa.sz + sb.sz - i.inter) >= 0.8
-        ),
-        edges AS (
-          SELECT id_a AS u, id_b AS v FROM dups
-          UNION
-          SELECT id_b, id_a FROM dups
-        ),
-        reach(node, r) AS (
-          SELECT u, u FROM edges
-          UNION
-          SELECT e.v, reach.r FROM reach JOIN edges e ON e.u = reach.node
-        ),
-        cc AS (SELECT node, min(r) AS comp FROM reach GROUP BY node),
-        q AS ({_quality_sql()}),
-        ranked AS (
-          SELECT cc.comp, cc.node, q.qs,
-                 row_number() OVER (PARTITION BY cc.comp
-                                    ORDER BY q.qs DESC, cc.node ASC) AS rk,
-                 count(*) OVER (PARTITION BY cc.comp) AS gsz
-          FROM cc JOIN q ON q.qid = cc.node
-        )
-        SELECT comp AS group_id,
-               {_SPLIT_CASE.replace('doc_id', 'comp')} AS split,
-               node AS survivor_doc_id,
-               qs AS survivor_quality,
-               CAST(gsz AS BIGINT) AS group_size
-        FROM ranked WHERE rk = 1
-    """,
+    oracle=_survivor_oracle(split=True),
     description="leak-free split x quality survivorship COMPOSED (r10, r9 "
     "verdict task 5): per duplicate cluster, the anchor-keyed split "
     "assignment (corpus_split_assign_leakfree's rule — the cluster's min "
@@ -1209,43 +1013,10 @@ def corpus_split_budget_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of the cluster id, never of the surviving doc",
 )
 def corpus_split_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composition of three oracle-checked stages (LSH pairs -> CC ->
-    quality window) plus the anchor-split CASE: the survivor row carries
-    the split of its CLUSTER (md5 of group_id == the cluster's min-id
-    anchor), so the kept document always lands in the same split as
-    every member it replaced — the invariant tests/test_split_leakage.py
-    pins against corpus_split_assign_leakfree."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.operators.graph import duplicate_groups
-    from data_pipeline_agent_spark.operators.text import quality_score
-
-    docs = table(spark, sf_dir, "documents")
-    pairs = D.minhash_near_dup_pairs(docs, threshold=0.8).select("id_a", "id_b")
-    groups = duplicate_groups(pairs)
-    q = quality_score(docs).select("doc_id", "quality_score")
-    w = Window.partitionBy("group_id").orderBy(
-        F.desc("quality_score"), F.asc("doc_id")
-    )
-    bucket = F.substring(F.md5(F.col("group_id").cast("string")), 1, 2)
-    split = (
-        F.when(bucket < "14", "test")
-        .when(bucket < "28", "val")
-        .otherwise("train")
-    )
-    return (
-        groups.join(q, "doc_id")
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select(
-            "group_id",
-            split.alias("split"),
-            F.col("doc_id").alias("survivor_doc_id"),
-            F.col("quality_score").alias("survivor_quality"),
-            "group_size",
-        )
-    )
+    """The survivor row carries the split of its CLUSTER (md5 of
+    group_id == the cluster's min-id anchor) — the invariant
+    tests/test_split_leakage.py pins against corpus_split_assign_leakfree."""
+    return _cluster_survivors(spark, sf_dir, split=True)
 
 
 def _neardup_arrivals_oracle(min_agree: int) -> str:
@@ -1282,9 +1053,6 @@ def _neardup_arrivals_oracle(min_agree: int) -> str:
     """
 
 
-from data_pipeline_agent_spark.streaming.neardup import MIN_SIG_AGREE
-
-
 @register(
     "dedup_neardup_arrivals",
     oracle=_neardup_arrivals_oracle(MIN_SIG_AGREE),
@@ -1305,13 +1073,6 @@ def dedup_neardup_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     min(doc_id) here; tests/test_streaming.py pins the streaming
     operator row-for-row against this frame on a two-micro-batch
     replay."""
-    from pyspark.sql import functions as F
-
-    from data_pipeline_agent_spark.session import fan_out
-    from data_pipeline_agent_spark.streaming.neardup import (
-        minhash_neardup_batch,
-    )
-
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.timestamp_seconds(F.col("doc_id")).alias("ts")
     )

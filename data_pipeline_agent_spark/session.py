@@ -105,6 +105,25 @@ def reroot(df, session: SparkSession):
     return out
 
 
+def release(*frames) -> None:
+    """Free the blocks each frame holds.
+
+    ``DataFrame.unpersist()`` only drops a cache-manager entry, so on a
+    ``localCheckpoint`` frame it frees nothing: the rows live in the RDD
+    under the plan's ``LogicalRDD`` leaf. For such a frame (also behind
+    the ``SubqueryAlias``/``View`` wrappers ``reroot`` adds) that RDD is
+    unpersisted; any other frame gets ``unpersist()``. Release a frame
+    only once whatever was built from it has materialized."""
+    for df in frames:
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.nodeName() in ("SubqueryAlias", "View"):
+            plan = plan.children().apply(0)
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+        else:
+            df.unpersist()
+
+
 def fan_out(df, min_partitions: int | None = None):
     """Widen a narrow scan before CPU-heavy per-row work (shingling,
     hashing, vector math).

@@ -8,9 +8,11 @@ in docstrings and tests/test_plans.py. Not part of the driver contract.
     python scripts/dump_plans.py --fingerprint [--sf-dir DIR] [name ...]
 
 ``--fingerprint`` writes no file: it prints one line per registry query
-(all of them when no name is given), a hash of the query's optimized
-logical plan with the ids that differ between sessions masked. Equal
-hashes on two checkouts mean a change left that plan as it was.
+(all of them when no name is given) with two hashes. The first is of the
+query's optimized logical plan with the ids that differ between sessions
+masked; the second is of its DuckDB oracle SQL with all whitespace
+removed (``-`` for a query without one). Equal hashes on two checkouts
+mean a change left that plan, and that oracle, as they were.
 """
 
 from __future__ import annotations
@@ -131,13 +133,16 @@ SHOWCASE = {
 
 # Session-specific parts of a plan's text: expression ids (``#12``), RDD
 # ids (``MapPartitionsRDD[12]``), the physical plan ids a cached
-# relation prints (``plan_id=12``) and the sequence number of the view
-# ``session.reroot`` routes a frame through.
+# relation prints (``plan_id=12``), the sequence number of the view
+# ``session.reroot`` routes a frame through, and the session-wide
+# counter in lambda variable names (``lambda x_182``), which depends on
+# how many lambdas earlier queries built.
 _VOLATILE = (
     (re.compile(r"#\d+"), ""),
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
     (re.compile(r"plan_id=\d+"), "plan_id=_"),
     (re.compile(r"__graft_reroot_\d+"), "__graft_reroot_N"),
+    (re.compile(r"(lambda \w+?)_\d+"), r"\1_N"),
 )
 
 
@@ -149,10 +154,16 @@ def normalized_plan(df) -> str:
     return txt
 
 
+def _hash16(txt: str) -> str:
+    return hashlib.sha256(txt.encode()).hexdigest()[:16]
+
+
 def fingerprints(spark, sf_dir: str, names: list[str]) -> None:
     for name in names or sorted(REGISTRY):
-        txt = normalized_plan(REGISTRY[name].spark(spark, sf_dir))
-        print(hashlib.sha256(txt.encode()).hexdigest()[:16], name, flush=True)
+        spec = REGISTRY[name]
+        plan = _hash16(normalized_plan(spec.spark(spark, sf_dir)))
+        oracle = _hash16(re.sub(r"\s", "", spec.oracle)) if spec.oracle else "-"
+        print(plan, oracle, name, flush=True)
         spark.catalog.clearCache()
 
 

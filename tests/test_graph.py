@@ -22,21 +22,31 @@ def _cc(spark, pairs, **kw):
     }
 
 
-def test_chain_collapses_to_min_label(spark):
+# small graphs take the driver union-find path by default;
+# driver_edges=0 sends them through the distributed loop
+PATHS = pytest.mark.parametrize(
+    "path_kw", [{}, {"driver_edges": 0}], ids=["driver", "loop"]
+)
+
+
+@PATHS
+def test_chain_collapses_to_min_label(spark, path_kw):
     # 1-2, 2-3, 3-4, 4-5: one component, min label 1, needs multi-round
     # propagation (diameter 4)
-    got = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)])
+    got = _cc(spark, [(1, 2), (2, 3), (3, 4), (4, 5)], **path_kw)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
 
 
-def test_disjoint_components_keep_separate_labels(spark):
-    got = _cc(spark, [(10, 11), (11, 12), (50, 51), (99, 98)])
+@PATHS
+def test_disjoint_components_keep_separate_labels(spark, path_kw):
+    got = _cc(spark, [(10, 11), (11, 12), (50, 51), (99, 98)], **path_kw)
     assert got == {10: 10, 11: 10, 12: 10, 50: 50, 51: 50, 98: 98, 99: 98}
 
 
-def test_edge_direction_irrelevant(spark):
+@PATHS
+def test_edge_direction_irrelevant(spark, path_kw):
     # pairs arrive as (bigger, smaller) — symmetrization must handle it
-    got = _cc(spark, [(7, 3), (3, 9)])
+    got = _cc(spark, [(7, 3), (3, 9)], **path_kw)
     assert got == {3: 3, 7: 3, 9: 3}
 
 

@@ -105,6 +105,7 @@ def test_dual_grain_constructed_instance(spark):
     from data_pipeline_agent_spark.plans.queries_dedup import (
         dual_grain_split_assign,
     )
+    from data_pipeline_agent_spark.session import release
 
     lex_text = "the quick brown fox jumps over the lazy dog again and again"
     docs = spark.createDataFrame(
@@ -135,7 +136,7 @@ def test_dual_grain_constructed_instance(spark):
     assert rows[1]["split"] == _split_of(1)  # anchor-keyed
     assert sum(1 for i in (1, 2, 3) if rows[i]["rk"] == 1) == 1
     assert rows[4]["rk"] == 1
-    ranked.unpersist(), lex.unpersist(), sem.unpersist()
+    release(ranked, lex, sem)
 
 
 def test_dual_grain_registry_contract(spark):
